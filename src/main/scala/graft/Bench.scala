@@ -4,45 +4,29 @@ import org.apache.spark.sql.SparkSession
 
 import graft.tools.TrialMeter
 
-/** Benchmark main (driver contract): runs every SparkEntry query on
-  * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query
-  * wall-clock seconds. local[32] with shuffle partitions = cores so
-  * local runs exercise the same parallel plan shapes a cluster would.
+/** Benchmark main: runs every benched SparkEntry query on
+  * SPARK_GRAFT_SF_DIR in a [[GraftSession]] and prints one JSON
+  * contract line with per-query wall-clock seconds.
+  *
+  * Usage: runMain graft.Bench [name,name,...]. The optional argument
+  * limits the benched roster and the scale-probe roster to the named
+  * queries (focused re-measurement); the timing path, the contract
+  * line's keys and the bench_detail.json shape stay the same.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val cores = try cpus.toInt catch { case _: Throwable =>
-      Runtime.getRuntime.availableProcessors() }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Optimization round 17 (ONLY session-config change this round;
-      // guide §2.2 "fewer, larger reduce partitions" applied to cached
-      // plans): without this, a persisted frame compiles WITHOUT AQE
-      // and its exchanges pin at spark.sql.shuffle.partitions — every
-      // consumer stage of every PersistSlots frame then pays
-      // shuffle.partitions micro-tasks however tiny the cached data
-      // (measured: q_t_closeness read its ~300-row cached aggregate
-      // through 4 consumers × 32 cached partitions = 134 tasks/run;
-      // dedup_containment 21.8 → 6.8 process-CPU-s with AQE-sized
-      // caches). The same pinning happens on a real cluster (caches
-      // freeze at e.g. 2000 partitions), so this is a scale win, not
-      // a local[32] tune; Spark leaves it false by default only
-      // because consumers that RELY on a cached plan's output
-      // partitioning could be surprised — no declared result here
-      // depends on partitioning (the documented fan-out invariant,
-      // oracle-verified at two SFs).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // trip-wire for silent interpreted fallbacks (see CodegenGuard):
-    // a codegen-compile ERROR during any trial fails the run
-    graft.tools.CodegenGuard.install()
+    val gateOnly: Set[String] = SparkEntry.gateOnlyCeiling.keySet
+    val only: Option[Set[String]] = args.headOption.map { a =>
+      val names = a.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- (SparkEntry.queries.keySet -- gateOnly)
+      require(unknown.isEmpty,
+        s"not benched queries: ${unknown.toSeq.sorted.mkString(",")}")
+      names
+    }
+    val selected: String => Boolean = n => only.forall(_.contains(n))
+    val cores = GraftSession.cores
+    val spark = GraftSession.local()
     val loadStart = TrialMeter.load1()
 
     // run-level external-load baseline: what other processes consume
@@ -211,23 +195,6 @@ object Bench {
       if (logAs.nonEmpty) trialLog(logAs) = res
       res
     }
-    // GATE-ONLY queries (round 12): correctness-gated by Verify every
-    // round but NOT benched — either a contract twin whose production
-    // replacement is what the board should time (the md5-per-position
-    // CDC forms, 3.4 s/run for a kernel whose shipped Gear replacement
-    // runs 0.64 s and is pinned below), or streaming pipelines whose
-    // cost is micro-batch commit overhead that measures the engine,
-    // not the operator (two representative stream entries stay
-    // benched: stream_dedup_ingest = stream-static band probe,
-    // stream_drift_monitor = stateful watermarked window agg). Since
-    // round 13 Verify records one untimed wall-clock per gate-only
-    // entry (verify_meta.json) with a generous ceiling, so a 10x
-    // regression in an untimed entry still surfaces.
-    val gateOnly: Set[String] = Set(
-      "dedup_cdc", "dedup_cdc_remove",
-      "stream_funnel", "stream_approx_users", "stream_cdc_upsert",
-      "stream_media_ingest", "stream_sink_parquet", "stream_sessionize",
-      "stream_attribution", "stream_redelivery_dedup")
     // Run-order decorrelation (round 16): the board used to run in
     // fixed alphabetical order, so an external load burst at a fixed
     // offset into the run hits the SAME queries every round — q_sq8
@@ -248,7 +215,7 @@ object Bench {
     val runOrder = new scala.util.Random(roundSeed)
       .shuffle(SparkEntry.queries.toSeq.sortBy(_._1))
     val results = runOrder
-      .filterNot { case (n, _) => gateOnly.contains(n) }
+      .filter { case (n, _) => !gateOnly.contains(n) && selected(n) }
       .map { case (name, fn) =>
         (name, timed(fn, sfDir, logAs = name))
       }
@@ -318,7 +285,7 @@ object Bench {
         // jitter would bury the real signal the field exists for.
         val AnomalyFactor = 1.5
         val anomalies = scala.collection.mutable.ArrayBuffer.empty[String]
-        val probes = probeNames.flatMap { name =>
+        val probes = probeNames.filter(selected).flatMap { name =>
           SparkEntry.queries.get(name).map { fn =>
             val base = timed(fn, baseDir, warmTrials = 3, warmups = 2)
             val main = timed(fn, sfDir, warmTrials = 3, warmups = 2)
@@ -342,8 +309,9 @@ object Bench {
     // with ONE r12 roster change (per the r11 verdict): the benched
     // CDC forms are the production Gear kernel (dedup_cdc_gear /
     // _gear_remove) — the md5-per-position contract twins they
-    // replaced are gate-only above. IMPLEMENTATION-CHANGE note (per
-    // the r12 advice): "dedup_pr_eval" kept its pinned slot across
+    // replaced are gate-only (SparkEntry.gateOnlyCeiling).
+    // IMPLEMENTATION-CHANGE note (per the r12 advice):
+    // "dedup_pr_eval" kept its pinned slot across
     // round 12's rewrite from the full exact-pairs eval to the
     // sampled eval (precision census + md5 1/4-sampled recall frame)
     // — its r11->r12 delta (6.0s -> 3.7s quiet-box) is that rewrite,

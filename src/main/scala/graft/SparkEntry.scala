@@ -16,6 +16,26 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     FlattenQueries.queries("flatten_nested2")(spark, "/root/testdata/sf0.001")
 
+  /** GATE-ONLY entries: correctness-gated by Verify but NOT benched —
+    * either a contract twin whose production replacement is what the
+    * board should time (the md5-per-position CDC forms, 3.4 s/run for
+    * a kernel whose shipped Gear replacement runs 0.64 s), or
+    * streaming pipelines whose cost is micro-batch commit overhead that
+    * measures the engine, not the operator (stream_dedup_ingest and
+    * stream_drift_monitor stay benched as representatives).
+    *
+    * Values are Verify's per-entry wall ceilings in seconds: ~4x the
+    * measured single-run sf0.01 walls (local[4], quiet box: dedup_cdc
+    * 1.1 s ... stream_attribution 10.3 s). Generous by design — they
+    * catch order-of-magnitude regressions in never-benched plans, not
+    * percent drift. */
+  val gateOnlyCeiling: Map[String, Double] = Map(
+    "dedup_cdc" -> 6.0, "dedup_cdc_remove" -> 6.0,
+    "stream_funnel" -> 18.0, "stream_approx_users" -> 40.0,
+    "stream_cdc_upsert" -> 15.0, "stream_media_ingest" -> 12.0,
+    "stream_sink_parquet" -> 18.0, "stream_sessionize" -> 25.0,
+    "stream_attribution" -> 45.0, "stream_redelivery_dedup" -> 15.0)
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     FlattenQueries.queries ++
       RelationalQueries.queries ++

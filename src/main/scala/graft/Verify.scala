@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -31,29 +30,9 @@ object Verify {
     // re-checks (the driver always passes two args = full run)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val cores = try cpus.toInt catch { case _: Throwable =>
-      Runtime.getRuntime.availableProcessors() }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.tools.CodegenGuard.install()
+    val cores = GraftSession.cores
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    // generous per-entry ceilings (seconds) for the gate-only
-    // entries: ~4x their measured round-13 single-run sf0.01 walls
-    // (local[4], quiet box: dedup_cdc 1.1s ... stream_attribution
-    // 10.3s). Generous by design — this catches order-of-magnitude
-    // regressions in never-benched plans, not percent drift.
-    val gateOnlyCeiling: Map[String, Double] = Map(
-      "dedup_cdc" -> 6.0, "dedup_cdc_remove" -> 6.0,
-      "stream_funnel" -> 18.0, "stream_approx_users" -> 40.0,
-      "stream_cdc_upsert" -> 15.0, "stream_media_ingest" -> 12.0,
-      "stream_sink_parquet" -> 18.0, "stream_sessionize" -> 25.0,
-      "stream_attribution" -> 45.0, "stream_redelivery_dedup" -> 15.0)
     val seconds = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val extShare = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     SparkEntry.queries
@@ -99,7 +78,7 @@ object Verify {
     val ceilingScale = sfDir.contains("sf0.01")
     val over =
       if (!ceilingScale) Seq.empty[String]
-      else gateOnlyCeiling.toSeq.sorted.collect {
+      else SparkEntry.gateOnlyCeiling.toSeq.sorted.collect {
         case (n, ceil) if seconds.get(n).exists(_ > ceil) =>
           System.err.println(f"[verify] WARNING: gate-only $n took" +
             f" ${seconds(n)}%.1fs (> ceiling ${ceil}%.0fs," +
@@ -112,7 +91,7 @@ object Verify {
       s"""{"sf":${q(sfDir)},"n_entries":${seconds.size},""" +
       s""""codegen_errors":$codegenErrors,""" +
       s""""gate_only_over_ceiling":${over.map(q).mkString("[", ",", "]")},""" +
-      s""""gate_only_ceiling":${secMap(gateOnlyCeiling)},""" +
+      s""""gate_only_ceiling":${secMap(SparkEntry.gateOnlyCeiling)},""" +
       s""""seconds":${secMap(seconds)},"ext_share":${secMap(extShare)}}"""
     Files.writeString(Paths.get(s"$outDir/verify_meta.json"), meta + "\n")
     // Round-over-round gate-cost trend (round 15): the driver's

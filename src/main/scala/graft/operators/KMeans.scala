@@ -49,78 +49,26 @@ object KMeans {
     math.min(maxK.toLong, math.max(2L, k)).toInt
   }
 
-  /** Squared L2 distance to each centroid (exact integer). Two
-    * physically different, arithmetically identical forms:
-    *
-    *  - k <= exprMax: per-centroid expressions expanded as
-    *    |v|^2 - 2 v.c + |c|^2, each one codegen'd
-    *    [[graft.plans.DotProductLong]] kernel against centroid
-    *    literals — |v|^2 once per row, |c|^2 folded on the driver.
-    *    The oracle-replayable form.
-    *  - k > exprMax: ONE codegen'd kernel expression
-    *    ([[graft.plans.NearestCentroidLong]]) over the embedded
-    *    centroid matrix. Thousands of per-centroid expression
-    *    branches would blow generated-method size past codegen limits
-    *    (autoK at n = 10^5..10^9 wants k in the
-    *    thousands-to-millions), while the kernel stays one compact
-    *    k×dim loop inside whole-stage codegen. Same integer sums,
-    *    same smallest-id tiebreak (ids scanned sorted, strict <), so
-    *    results are bit-identical — pinned by Round5OpsSpec.
-    *
-    * Default exprMax = 0 (optimization round 17; was 256): the
-    * kernel form is now the default at EVERY k. The unrolled form
-    * embeds k centroid literals + 2k expression nodes per assignment
-    * — at k=8..16 that alone fattened every k-means/PQ plan (plan
-    * build, canonicalization, per-task deserialization all O(plan)),
-    * and the centroid payload now rides a per-executor broadcast ref
-    * inside the kernel ([[graft.plans.BcRef]]) instead of per-task
-    * literals. Results unchanged at any switch point (the
-    * Round5OpsSpec pin); the expression form stays behind the
-    * parameter as the oracle-replayable reference and for the spec's
-    * differential runs.
+  /** Nearest centroid and its squared L2 distance (exact integer):
+    * ONE codegen'd kernel expression
+    * ([[graft.plans.NearestCentroidLong]]) over the centroid matrix,
+    * which rides a per-executor broadcast ref ([[graft.plans.BcRef]]).
+    * Generated-method size does not grow with k (autoK at
+    * n = 10^5..10^9 wants k in the thousands-to-millions), and the plan
+    * stays small at any k. Ties go to the smallest cluster id (ids
+    * scanned sorted, strict <); a null vector or null element gives a
+    * null cluster and dist. Round5OpsSpec pins it bit-identical to the
+    * oracle-replayable per-centroid expression form.
     */
-  private[graft] def assignTo(q0: DataFrame, centroids: Map[Int, Seq[Long]],
-                              exprMax: Int = 0): DataFrame = {
-    import graft.plans.VectorExpressions.dotLong
+  private[graft] def assignTo(q0: DataFrame,
+                              centroids: Map[Int, Seq[Long]]): DataFrame = {
     val ids = centroids.keys.toSeq.sorted
-    if (ids.length <= exprMax) {
-      val q = q0.withColumn("__vn", dotLong(col("__q"), col("__q")))
-      val dists = array(ids.map { i =>
-        val c = centroids(i)
-        col("__vn") - lit(2L) * dotLong(col("__q"), typedlit(c)) +
-          lit(c.map(x => x * x).sum)
-      }: _*)
-      // ties assign to the smallest surviving cluster id:
-      // array_position takes the FIRST index of the minimum and `ids`
-      // is sorted, which is what the oracle's ORDER BY d, c replays
-      q.withColumn("__d", dists)
-        .withColumn("dist", array_min(col("__d")))
-        // dist null (null input vector) -> cluster null too, matching
-        // the kernel path's null struct; unguarded, array_position
-        // over the all-null distance array resolves to position 1 and
-        // would emit cluster 0 with a null dist
-        .withColumn("cluster",
-          when(col("dist").isNotNull,
-            element_at(typedlit(ids),
-              array_position(col("__d"), array_min(col("__d"))).cast("int"))))
-        .drop("__d", "__vn")
-    } else {
-      // ONE codegen'd kernel expression against the embedded centroid
-      // matrix (graft.plans.NearestCentroidLong): a compact k*dim loop
-      // that inlines into the surrounding whole-stage-codegen
-      // projection — no per-row boxed ser/de, and generated-method
-      // size does not grow with k (the per-centroid expansion above
-      // would blow past JIT limits at autoK's thousands of clusters).
-      // Null vector or null element -> null struct, exactly the
-      // expression form's null-propagating arithmetic — the two paths
-      // must stay bit-identical on ALL inputs (pinned by Round5OpsSpec)
-      val assigned = graft.plans.VectorExpressions.nearestCentroidLong(
-        col("__q"), ids.map(i => (i, centroids(i))))
-      q0.withColumn("__a", assigned)
-        .withColumn("cluster", col("__a").getField("cluster"))
-        .withColumn("dist", col("__a").getField("dist"))
-        .drop("__a")
-    }
+    val assigned = graft.plans.VectorExpressions.nearestCentroidLong(
+      col("__q"), ids.map(i => (i, centroids(i))))
+    q0.withColumn("__a", assigned)
+      .withColumn("cluster", col("__a").getField("cluster"))
+      .withColumn("dist", col("__a").getField("dist"))
+      .drop("__a")
   }
 
   /** Exact per-(cluster, dim) coordinate sums and member counts of

@@ -91,7 +91,7 @@ object PQ {
     * chain against k typedlit centroid literals per subspace. Same
     * values (exact integer Σ(s−c)², ids scanned ascending, strict <
     * keeps the smallest code on ties — the bit-identity the
-    * Round5OpsSpec pin established for KMeans.assignTo's two forms);
+    * Round5OpsSpec pin of KMeans.assignTo against the expression form);
     * the plan shrinks from m·k literal branches to m kernel nodes,
     * which is what makes the PQ family cheap to plan, serialize and
     * fan out. */

@@ -7,12 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** SparkSessionExtensions hook: registers the engine's native
   * expressions under SQL names so `spark.sql("SELECT graft_dot(a,b)")`
   * works anywhere in a session wired with
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)   // or
-  *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  * }}}
+  * `spark.sql.extensions=graft.plans.GraftExtensions` (part of
+  * [[graft.GraftSession.conf]]) or set up by [[graft.GraftSession.setup]].
   *
   * The registry path (rather than `udf.register`) keeps the functions
   * full Catalyst citizens: codegen, constant folding, null propagation.
@@ -41,7 +37,7 @@ object GraftExtensions {
         DotProductLong(children.head, children(1))
       }))
 
-  /** Register into an already-built session (tests, shells). */
+  /** Register into an already-built session (GraftSession.setup). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     functions.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)

@@ -430,8 +430,8 @@ final class CentroidsLongRef(centroids: Seq[(Int, Seq[Long])])
 
 /** Nearest quantized centroid of an `array<bigint>` vector: argmin
   * exact integer squared-L2 over the centroid matrix, smallest
-  * centroid id on ties. Replaces the per-row ScalaUDF kernel in
-  * [[graft.operators.KMeans.assignTo]]'s large-k branch: the UDF
+  * centroid id on ties. Replaced the per-row ScalaUDF kernel in
+  * [[graft.operators.KMeans.assignTo]]: the UDF
   * blocked whole-stage codegen and paid boxed ser/de per row on
   * corpus-wide assignment passes (k-means fit, IVF+PQ coarse
   * quantization). One compact k×dim loop at ANY k — unlike the

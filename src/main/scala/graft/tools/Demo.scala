@@ -1,15 +1,11 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.schema.SchemaInfo
 
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
 
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     val ord = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
@@ -62,14 +58,7 @@ object Demo {
     println(s"exact pairs=$exactPairs lsh pairs=$lshPairs (lsh <= exact expected)")
 
     println("== Bucketing: co-located join without shuffle ==")
-    // the in-memory catalog is fresh each JVM, so DROP TABLE can't see
-    // (or clean) a warehouse dir left by a previous run — remove both
-    Seq("demo_li_b", "demo_ord_b").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir") + "/" + t)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
+    Seq("demo_li_b", "demo_ord_b").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     graft.operators.Bucketing.writeBucketed(
       li.select(col("l_orderkey"), col("l_quantity")), "demo_li_b", "l_orderkey", 4)
     graft.operators.Bucketing.writeBucketed(

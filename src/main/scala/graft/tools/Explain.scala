@@ -1,13 +1,18 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dumps formatted physical plans for the headline queries (markdown
-  * to stdout — captured as PLANS.md). The point is auditability of
-  * the scale claims: pushed filters, pruned read schemas, broadcast
-  * vs shuffle joins, and whole-stage codegen spans are all visible
-  * per query.
+/** Dumps formatted physical plans (markdown to stdout — captured as
+  * PLANS.md). The point is auditability of the scale claims: pushed
+  * filters, pruned read schemas, broadcast vs shuffle joins, and
+  * whole-stage codegen spans are all visible per query.
+  *
+  * Usage: runMain graft.tools.Explain [sfDir] [name,name,...] — sf0.001
+  * and the headline list by default; cores from SPARK_GRAFT_CPUS
+  * (PLANS.md is generated at 4 cores).
+  * Before/after plan evidence for a size-guarded mechanism (the scan
+  * fan-out) must be dumped at the bench shape (sf0.1, bench cores):
+  * below the guard's floor the plans are identical.
   */
 object Explain {
   // one representative per operator family
@@ -153,22 +158,21 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = args.lift(1).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(headline)
+    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    val spark = graft.GraftSession.local()
 
-    println("# Physical plans (headline queries, " + sfDir + ")")
+    val which = if (args.length > 1) "named queries" else "headline queries"
+    println(s"# Physical plans ($which, $sfDir)")
     println()
     println("Generated by `graft.tools.Explain`; regenerate with:")
-    println("`sbt -batch \"runMain graft.tools.Explain\" 2>/dev/null | " +
+    println("`SPARK_GRAFT_CPUS=4 sbt -batch \"runMain graft.tools.Explain\" 2>/dev/null | " +
       "grep -vE '^\\[' > PLANS.md`")
     // (forked-run output passes through raw — build.sbt StdoutOutput —
     // so only sbt's own [info]/[success] lines need stripping)
-    headline.foreach { name =>
+    names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       println()
       println(s"## $name")

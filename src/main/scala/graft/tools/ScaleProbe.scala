@@ -73,17 +73,9 @@ object ScaleProbe {
     val work = if (args.length > 3) args(3) else "/root/repo/tmp/scale"
     val dest = s"$work/r$r$mode"
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // fail the probe on silent interpreted fallbacks (CodegenGuard)
-    CodegenGuard.install()
+    // the session arms CodegenGuard: the probe fails on silent
+    // interpreted fallbacks
+    val spark = graft.GraftSession.local()
     import spark.implicits._
 
     // A bare directory is NOT proof of a complete dataset — a run

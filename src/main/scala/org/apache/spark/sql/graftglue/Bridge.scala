@@ -21,4 +21,8 @@ object Bridge {
   : org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming = false)
+
+  /** A fresh temporary directory that Spark deletes at JVM exit. */
+  def tempDir(prefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix)
 }

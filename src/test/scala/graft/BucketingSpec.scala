@@ -9,18 +9,7 @@ import graft.operators.Bucketing
 class BucketingSpec extends SparkSpec {
 
   test("bucketed join plans without shuffle exchanges") {
-    // clean slate: drop tables and any leftover warehouse locations
-    Seq("li_bucketed", "ord_bucketed").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(loc)
-      }
-    }
+    Seq("li_bucketed", "ord_bucketed").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select(col("l_orderkey"), col("l_quantity"))
@@ -55,14 +44,6 @@ class BucketingSpec extends SparkSpec {
     // never re-partitions — the exchange appears on the (small)
     // batch side only
     spark.sql("DROP TABLE IF EXISTS corpus_band_index")
-    val loc = new java.io.File("spark-warehouse/corpus_band_index")
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(loc)
-    }
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val corpus = docs.filter(col("doc_id") % 10 =!= 7)
     val batch = docs.filter(col("doc_id") % 10 === 7)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Decontaminate, KMeans, Sampling}
 
@@ -40,43 +41,66 @@ class Round5OpsSpec extends SparkSpec {
     }
   }
 
-  test("kernel-form assignment (k > exprMax) is bit-identical to expressions") {
-    // autoK at production n wants thousands of clusters; past exprMax
-    // the per-centroid expression array gives way to one broadcast-
-    // matrix kernel udf. Same integer sums, same smallest-id
-    // tiebreak — both paths forced here over the same centroids.
+  /** Differential oracle for [[KMeans.assignTo]]'s kernel: the
+    * oracle-replayable per-centroid expression form,
+    * |v|^2 - 2 v.c + |c|^2 per centroid literal, ties to the smallest
+    * id (array_position takes the FIRST minimum over sorted ids — what
+    * the SQL oracle's ORDER BY d, c replays). */
+  private def exprAssign(q0: DataFrame, centroids: Map[Int, Seq[Long]]): DataFrame = {
+    import graft.plans.VectorExpressions.dotLong
+    val ids = centroids.keys.toSeq.sorted
+    val q = q0.withColumn("__vn", dotLong(col("__q"), col("__q")))
+    val dists = array(ids.map { i =>
+      val c = centroids(i)
+      col("__vn") - lit(2L) * dotLong(col("__q"), typedlit(c)) +
+        lit(c.map(x => x * x).sum)
+    }: _*)
+    q.withColumn("__d", dists)
+      .withColumn("dist", array_min(col("__d")))
+      // null vector -> null cluster too; unguarded, array_position over
+      // the all-null distance array resolves to position 1
+      .withColumn("cluster",
+        when(col("dist").isNotNull,
+          element_at(typedlit(ids),
+            array_position(col("__d"), array_min(col("__d"))).cast("int"))))
+      .drop("__d", "__vn")
+  }
+
+  test("kernel-form assignment is bit-identical to the expression oracle") {
+    // autoK at production n wants thousands of clusters, so assignment
+    // is one centroid-matrix kernel; it must match the per-centroid
+    // expression form: same integer sums, same smallest-id tiebreak.
     val q = embeddings.select(col("vec_id"),
       KMeans.quantize(col("embedding")).as("__q"))
     val cents = q.orderBy(col("vec_id")).limit(12).collect()
       .map(_.getSeq[Long](1).toSeq).zipWithIndex
       .map { case (v, i) => i -> v }.toMap
-    def rows(exprMax: Int) =
-      KMeans.assignTo(q, cents, exprMax)
+    def rows(assign: (DataFrame, Map[Int, Seq[Long]]) => DataFrame) =
+      assign(q, cents)
         .select("vec_id", "cluster", "dist").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sortBy(_._1).toSeq
-    assert(rows(exprMax = 100) == rows(exprMax = 1))
+    assert(rows(exprAssign) == rows(KMeans.assignTo))
   }
 
   test("kernel and expression assignment agree on null vectors") {
     // a null embedding must yield null cluster/dist on BOTH paths —
-    // the kernel udf null-guards where the expression form's
-    // arithmetic null-propagates; a corpus with one bad row must not
-    // crash only when autoK pushes k past exprMax
+    // the kernel null-guards where the expression form's arithmetic
+    // null-propagates
     val q = embeddings.limit(3)
       .select(col("vec_id"), KMeans.quantize(col("embedding")).as("__q"))
       .union(embeddings.limit(1)
         .select(col("vec_id") + 1000000L,
           lit(null).cast("array<bigint>").as("__q")))
     val cents = Map(0 -> Seq.fill(64)(0L), 1 -> Seq.fill(64)(5L))
-    def rows(exprMax: Int) =
-      KMeans.assignTo(q, cents, exprMax)
+    def rows(assign: (DataFrame, Map[Int, Seq[Long]]) => DataFrame) =
+      assign(q, cents)
         .select("vec_id", "cluster", "dist").collect()
         .map(r => (r.getLong(0),
           if (r.isNullAt(1)) None else Some(r.getInt(1)),
           if (r.isNullAt(2)) None else Some(r.getLong(2))))
         .sortBy(_._1).toSeq
-    val expr = rows(exprMax = 100)
-    assert(expr == rows(exprMax = 1))
+    val expr = rows(exprAssign)
+    assert(expr == rows(KMeans.assignTo))
     assert(expr.count { case (_, c, d) => c.isEmpty && d.isEmpty } == 1)
   }
 

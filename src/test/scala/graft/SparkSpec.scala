@@ -4,16 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session —
-  * ScalaTest suites run in the forked test JVM).
+  * ScalaTest suites run in the forked test JVM), built by the same
+  * factory as Bench and Verify so the suite tests the engine they run.
   */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", false)
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local()
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -219,6 +219,11 @@ class TrialMeterSpec extends AnyFunSuite {
       val fl = TrialMeter.flags(Seq(base, base, base, base, loaded),
         extBaseline = base.extShare)
       assert(fl.last, s"loaded window not flagged: $loaded")
-    } finally burners.foreach(_.destroyForcibly())
+    } finally burners.foreach { p =>
+      // kill the shells too: SIGKILL on `timeout` orphans its child,
+      // which would then spin forever
+      p.descendants().forEach { d => d.destroyForcibly(); () }
+      p.destroyForcibly()
+    }
   }
 }

@@ -44,7 +44,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("graft_dot registers as a SQL function") {
-    graft.plans.GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT graft_dot(array(cast(1.0 AS float), cast(2.0 AS float)),
         |                 array(cast(3.0 AS float), cast(4.0 AS float))) AS d""".stripMargin)
@@ -73,7 +72,6 @@ class VectorExpressionsSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.startsWith("*("), s"no codegen in:\n$plan")
 
-    graft.plans.GraftExtensions.register(spark)
     assert(spark.sql(
       "SELECT graft_dot_long(array(2L, 3L), array(5L, 7L)) AS d")
       .head().getLong(0) == 31L)
