@@ -22,9 +22,14 @@ import graft.functions.TextFunctions.words
   * repo-wide rule). Plan branches that re-read the corpus (the
   * survivor join-back, the eval holdout) re-evaluate the projection
   * with the scan; pass a cached/persisted `docs` frame if that scan
-  * is expensive. The chain is lazy EXCEPT [[nearDedup]] (iterative
-  * component resolution runs jobs at builder-call time and persists
-  * its edge frame) and [[importanceSelect]] (two bucket-count
+  * is expensive. [[nearDedup]] and [[decontaminate]] have no
+  * join-back: they left-anti-join the carried frame against the ids
+  * they remove, so their only extra corpus read is the pair/gram
+  * branch that finds those ids. The chain is lazy EXCEPT
+  * [[nearDedup]] (component resolution runs at builder-call time: one
+  * bounded collect of the pair frame, which it persists in a single
+  * session slot, or the distributed fallback's rounds beyond the
+  * driver cap) and [[importanceSelect]] (two bucket-count
   * aggregations collect at call time to build the vote table) —
   * everything else defers until the caller acts on the result.
   * `q_curate_e2e` is this builder's output verbatim and carries the
@@ -45,11 +50,12 @@ final case class Curation private (private val df: DataFrame,
     * rows-in/rows-out monitoring surface a production curation run
     * needs, with zero extra scans (the Dedup components pattern).
     * The checkpoint is also what makes the counts safe: the carried
-    * frame feeds several join branches downstream (dedup pairs +
-    * join-back), and an un-checkpointed observe node duplicated
-    * across branches would be rejected by the analyzer. Costs one
-    * materialization per stage — the trade a monitored production
-    * pipeline makes anyway (each stage is its restart point).
+    * frame feeds several join branches downstream (dedup pairs + the
+    * anti-join's stream side), and an un-checkpointed observe node
+    * duplicated across branches would be rejected by the analyzer.
+    * Costs one materialization per stage — the trade a monitored
+    * production pipeline makes anyway (each stage is its restart
+    * point).
     * Records the current survivor count as stage "input". */
   def instrumented(): Curation =
     copy(instrument = true).stage("input", df)
@@ -115,32 +121,50 @@ final case class Curation private (private val df: DataFrame,
         .join(df, idCol))
 
   /** Near-duplicate removal: winnow-Jaccard candidate pairs over the
-    * shared word arrays, connected components, survivor = min id. */
+    * shared word arrays, connected components, survivor = min id.
+    *
+    * Only the removed ids are computed: the pair-graph nodes whose
+    * component label is not themselves
+    * ([[Dedup.connectedComponentsAuto]]'s endpoint labels), and the
+    * corpus is left-anti-joined against them — every surviving row
+    * passes through once, with no survivor join-back. While the pair
+    * graph fits the driver cap the removed set is a local relation
+    * from one bounded collect, so the anti-join broadcasts and the
+    * corpus never shuffles. Documents with a null id are dropped
+    * here (they cannot be resolved against a component). */
   def nearDedup(shingleLen: Int = 3, window: Int = 4,
                 minJaccard: Double = 0.3): Curation = {
     val pairs = Dedup.winnowJaccardPairsOfWords(
       df, idCol, "__w", shingleLen, window, minJaccard)
+    val removed = Dedup.endpointComponentsAuto(pairs)
+      .filter(col("id") =!= col("component"))
+      .select(col("id").as("__removed"))
     stage("near_dedup",
-      Dedup.connectedComponentsAuto(pairs, df, idCol)
-        .filter(col("id") === col("component"))
-        .select(col("id").as(idCol))
-        .join(df, idCol))
+      df.filter(col(idCol).isNotNull)
+        .join(removed, col(idCol) === col("__removed"), "left_anti"))
   }
 
   /** Drop documents sharing any word n-gram with the eval holdout
     * (and holdout members themselves). `eval` needs (idCol, `__w`) —
-    * build it from the same [[Curation.apply]] projection. */
+    * build it from the same [[Curation.apply]] projection.
+    *
+    * The train side is left-anti-joined against the n-gram hit rows
+    * ([[Decontaminate.overlapReportOfWords]]'s evidence, before its
+    * per-document grouping): no contamination report over the whole
+    * train set and no survivor join-back. The anti-join broadcasts the
+    * hit ids when the planner's estimate for them fits the broadcast
+    * threshold; otherwise it shuffles the train side once. Documents
+    * with a null id are dropped, as the removal is keyed on id. */
   def decontaminate(eval: DataFrame, n: Int = 3): Curation = {
     // eval holdouts are tiny by construction — broadcast the anti-join
     // build side so the corpus never shuffles on id
     val evalIds = broadcast(eval.select(col(idCol)))
-    val train = df.join(evalIds, Seq(idCol), "left_anti")
+    val train = df.filter(col(idCol).isNotNull)
+      .join(evalIds, Seq(idCol), "left_anti")
+    val hits = Decontaminate.overlapHitsOfWords(train, eval, idCol, "__w", n)
+      .select(col("id").as("__hit"))
     stage("decontaminate",
-      Decontaminate.overlapReportOfWords(
-          train, eval, idCol, "__w", n)
-        .filter(col("contaminated") === 0)
-        .select(col(idCol))
-        .join(train, idCol))
+      train.join(hits, col(idCol) === col("__hit"), "left_anti"))
   }
 
   /** Drop documents whose duplicated-span fraction exceeds

@@ -25,6 +25,21 @@ object Decontaminate {
     df.select(col(idCol).as("id"),
         explode(array_distinct(shinglesOfWords(col(wordsCol), n))).as("gram"))
 
+  /** The contamination evidence itself: one `(id, gram)` row per
+    * distinct train-document n-gram that also occurs in `eval` (the
+    * train gram scan ⋈ the broadcast distinct eval grams). Clean
+    * documents have no row, so an anti-join on `id` decontaminates
+    * without annotating — or re-joining — the whole train set. */
+  private[operators] def overlapHitsOfWords(train: DataFrame, eval: DataFrame,
+                                            idCol: String, wordsCol: String,
+                                            n: Int): DataFrame = {
+    val evalGrams = broadcast(
+      gramsOfWords(eval, idCol, wordsCol, n).select(col("gram")).distinct())
+    gramsOfWords(train, idCol, wordsCol, n)
+      .join(evalGrams, Seq("gram"))
+      .select(col("id"), col("gram"))
+  }
+
   /** Per-train-document contamination report: `n_shared` distinct
     * eval ngrams found in the document and a 0/1 `contaminated`
     * flag. Clean documents appear with `n_shared = 0`, so the output
@@ -43,10 +58,7 @@ object Decontaminate {
   def overlapReportOfWords(train: DataFrame, eval: DataFrame,
                            idCol: String, wordsCol: String,
                            n: Int = 3): DataFrame = {
-    val evalGrams = broadcast(
-      gramsOfWords(eval, idCol, wordsCol, n).select(col("gram")).distinct())
-    val hits = gramsOfWords(train, idCol, wordsCol, n)
-      .join(evalGrams, Seq("gram"))
+    val hits = overlapHitsOfWords(train, eval, idCol, wordsCol, n)
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_shared")) // grams are pre-distinct per id
     train.select(col(idCol).as("id"))

@@ -233,17 +233,29 @@ object Dedup {
     * canonical keep/drop decision (component label = smallest id in
     * the group, the conventional survivor).
     *
-    * Iterative min-label propagation: each round, every node lowers
-    * its label to the minimum of its own and its neighbors' labels —
-    * one equi-join + one map-combined min aggregate per round, and
-    * labels only ever decrease, so the fixpoint is exact. Converges
-    * in O(component diameter) rounds; near-dup clusters are
-    * star-like (diameter 2-4), so a handful of shuffles settles even
-    * a 100 TB corpus. `localCheckpoint` cuts the growing lineage each
-    * round (the standard iterative-DataFrame pattern); for
-    * pathological chain-shaped components use
+    * Size-adaptive, same contract both ways. A near-dup pair graph is
+    * a vanishing fraction of the corpus, so the fast path is ONE
+    * bounded collect ([[driverComponents]]): at most
+    * `driverThreshold / 2` non-null pair rows come back to the driver
+    * (each pair is two directed edges, so `driverThreshold` bounds
+    * 2 × pair rows before any `distinct`), one union-find pass labels
+    * them, and the labels join `ids` as a local relation that
+    * broadcasts on its own exact size — zero extra shuffles. The
+    * default threshold (2^16) keeps the collected pairs and labels in
+    * the ~10 MB range, the same order as a default broadcast-join
+    * build side; raise it only with driver/executor memory to spare.
+    *
+    * Beyond the cap: iterative min-label propagation. Each round,
+    * every node lowers its label to the minimum of its own and its
+    * neighbors' labels — one equi-join + one map-combined min
+    * aggregate per round, and labels only ever decrease, so the
+    * fixpoint is exact. Converges in O(component diameter) rounds;
+    * near-dup clusters are star-like (diameter 2-4), so a handful of
+    * shuffles settles even a 100 TB corpus. `localCheckpoint` cuts
+    * the growing lineage each round (the standard iterative-DataFrame
+    * pattern); for pathological chain-shaped components use
     * [[connectedComponentsStars]], the O(log n)-round alternating
-    * star-contraction form.
+    * star-contraction form. Spec pins both paths to identical labels.
     *
     * @param ids universe of node ids (isolated nodes keep their own
     *            id as component)
@@ -252,55 +264,76 @@ object Dedup {
                           aCol: String = "id_a", bCol: String = "id_b",
                           maxIter: Int = 25,
                           driverThreshold: Long = 1L << 16): DataFrame = {
-    // null endpoints are inert in the iterative path (they never match
-    // a join); drop them up front so the driver fast path's primitive
-    // tuple collect behaves identically
+    val p = PersistSlots.swap(PairsSlot, pairs)
+    labelIds(ids, idCol, driverComponents(p, aCol, bCol, driverThreshold)
+      .getOrElse(minLabelComponents(p, aCol, bCol, maxIter)))
+  }
+
+  /** Pair frames share this slot: the bounded collect and the
+    * distributed fallback both read them, so the pair plan (a
+    * winnow-join-scale subtree) runs once per call, and the next call
+    * unpersists the previous copy. */
+  private val PairsSlot = "dedup.autoPairs"
+
+  /** The driver fast path of [[connectedComponents]] and
+    * [[connectedComponentsAuto]]: one `limit(cap + 1).collect()` of
+    * the non-null pair rows, cap = `driverThreshold / 2`. Under the
+    * cap, union-find on the driver gives every pair endpoint its
+    * min-id label, returned as a local (id, component) frame. Over
+    * the cap — or for non-Long endpoints, which the primitive
+    * union-find does not cover — None, and the caller resolves the
+    * same (persisted) pairs with a distributed form. Null endpoints
+    * are inert in every form, so they are dropped up front. */
+  private def driverComponents(pairs: DataFrame, aCol: String, bCol: String,
+                               driverThreshold: Long): Option[DataFrame] = {
+    val longIds = Seq(aCol, bCol).forall(c =>
+      pairs.schema(c).dataType == org.apache.spark.sql.types.LongType)
+    if (!longIds) return None
+    val cap = math.max(0L, math.min(driverThreshold / 2, Int.MaxValue - 1L)).toInt
+    val es = pairs.select(col(aCol), col(bCol))
+      .filter(col(aCol).isNotNull && col(bCol).isNotNull)
+      .limit(cap + 1)
+      .as[(Long, Long)](org.apache.spark.sql.Encoders.tuple(
+        org.apache.spark.sql.Encoders.scalaLong,
+        org.apache.spark.sql.Encoders.scalaLong)).collect()
+    if (es.length > cap) return None
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    es.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    // root = smallest id in the component (unions always point the
+    // larger root at the smaller one)
+    val labels = es.iterator.flatMap(e => Iterator(e._1, e._2)).toSet[Long]
+      .toSeq.map(v => v -> find(v))
+    Some(pairs.sparkSession.createDataFrame(labels).toDF("id", "component"))
+  }
+
+  /** `ids` left-joined to endpoint labels: ids outside the pair graph
+    * are singletons and keep their own id as component. */
+  private def labelIds(ids: DataFrame, idCol: String,
+                       labels: DataFrame): DataFrame =
+    ids.select(col(idCol).as("id"))
+      .join(labels, Seq("id"), "left")
+      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+
+  /** Min-label propagation over the endpoints of `pairs` (the
+    * distributed form of [[connectedComponents]]). */
+  private def minLabelComponents(pairs: DataFrame, aCol: String, bCol: String,
+                                 maxIter: Int): DataFrame = {
+    // read by every round's join: persisted for the duration of the
+    // iteration only
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionAll(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct().persist()
-
-    // Size-adaptive strategy, same contract both ways: a near-dup
-    // pair graph is a vanishing fraction of the corpus, so when it
-    // fits comfortably on the driver a single union-find pass
-    // replaces the whole multi-round join iteration — one collect,
-    // zero extra shuffles. The default threshold (2^16 directed
-    // edges) keeps the collected pairs + boxed label Map in the
-    // ~10 MB range, the same order as a default broadcast-join
-    // build side; raise it only with driver/executor memory to
-    // spare. The iterative path remains for genuinely huge pair
-    // graphs. Spec pins both paths to identical labels.
-    val nEdges = edges.count()
-    val longIds = edges.schema("src").dataType ==
-      org.apache.spark.sql.types.LongType &&
-      ids.schema(idCol).dataType == org.apache.spark.sql.types.LongType
-    if (nEdges <= driverThreshold && longIds) {
-      val es = edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .as[(Long, Long)](org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong)).collect()
-      edges.unpersist()
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      // root = smallest id in the component (unions always point the
-      // larger root at the smaller one)
-      val labels = es.iterator.flatMap(e => Iterator(e._1, e._2)).toSet[Long]
-        .iterator.map(v => v -> find(v)).toMap
-      val bc = ids.sparkSession.sparkContext.broadcast(labels)
-      val compOf = udf { (id: Long) => bc.value.getOrElse(id, id) }
-      return ids.select(col(idCol).as("id"))
-        .withColumn("component", compOf(col("id").cast("long")))
-    }
     // Iterate ONLY over nodes that appear in some edge: in a near-dup
     // graph that's a vanishing fraction of the corpus (everything else
     // is a singleton), so each round checkpoints the matched subgraph,
@@ -340,43 +373,40 @@ object Dedup {
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds " +
           "(component min-distance exceeds maxIter); raise maxIter")
-    ids.select(col(idCol).as("id"))
-      .join(labels.select(col("id"), col("component")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+    labels.select(col("id"), col("component"))
   }
 
   /** Size-adaptive component resolution for COMPOSITE operators
     * (survivor selection, pipelines) whose pair-graph shape is
-    * unknown: driver union-find when the graph is tiny (via
-    * [[connectedComponents]]' fast path), large-star/small-star
-    * contraction beyond ([[connectedComponentsStars]] — O(log n)
-    * rounds regardless of diameter). Min-label propagation is NOT in
-    * this chooser: its round count is the component diameter, and a
-    * chain-shaped near-dup component would abort it at maxIter where
-    * stars converges. Both branches emit identical min-id labels. */
+    * unknown: the one-collect driver union-find of
+    * [[connectedComponents]] while at most `driverThreshold / 2` pair
+    * rows exist (2 × pair rows, counted before `distinct`, bounded by
+    * `driverThreshold`), large-star/small-star contraction beyond
+    * ([[connectedComponentsStars]] — O(log n) rounds regardless of
+    * diameter). Min-label propagation is NOT in this chooser: its
+    * round count is the component diameter, and a chain-shaped
+    * near-dup component would abort it at maxIter where stars
+    * converges. Both branches emit identical min-id labels. */
   def connectedComponentsAuto(pairs: DataFrame, ids: DataFrame, idCol: String,
                               aCol: String = "id_a", bCol: String = "id_b",
-                              driverThreshold: Long = 1L << 16): DataFrame = {
-    // The size probe MATERIALIZES the pair plan, and the routed
-    // component run reads it again to build edges — slot-persist it
-    // so both share one execution of the (winnow-join-scale) pair
-    // subtree instead of running it twice per call.
-    val p = PersistSlots.swap("dedup.autoPairs", pairs)
-    // directed-edge count is <= 2x the pair count, so this bound is
-    // conservative: under it, connectedComponents provably takes its
-    // driver fast path — but ONLY for Long ids (other id types skip
-    // the union-find collect and would fall through to exactly the
-    // diameter-bounded min-label iteration this router exists to
-    // avoid), so non-Long ids go straight to stars at any size
-    val nPairs = p.count()
-    val longIds =
-      p.schema(aCol).dataType == org.apache.spark.sql.types.LongType &&
-      p.schema(bCol).dataType == org.apache.spark.sql.types.LongType &&
-      ids.schema(idCol).dataType == org.apache.spark.sql.types.LongType
-    if (longIds && 2 * nPairs <= driverThreshold)
-      connectedComponents(p, ids, idCol, aCol, bCol,
-        driverThreshold = driverThreshold)
-    else connectedComponentsStars(p, ids, idCol, aCol, bCol)
+                              driverThreshold: Long = 1L << 16): DataFrame =
+    labelIds(ids, idCol,
+      endpointComponentsAuto(pairs, aCol, bCol, driverThreshold))
+
+  /** [[connectedComponentsAuto]]'s labels for the pair endpoints
+    * only, without the join against an id universe: one
+    * (id, component) row per pair-graph node that is not its
+    * component's minimum, plus — under the driver cap — one per
+    * minimum (id == component). Callers that only need the
+    * non-survivors (`id =!= component`) read this instead of
+    * labelling the whole corpus; under the cap it is a local
+    * relation. */
+  private[operators] def endpointComponentsAuto(
+      pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
+      driverThreshold: Long = 1L << 16): DataFrame = {
+    val p = PersistSlots.swap(PairsSlot, pairs)
+    driverComponents(p, aCol, bCol, driverThreshold)
+      .getOrElse(starComponents(p, aCol, bCol, maxIter = 50))
   }
 
   /** Connected components by alternating large-star / small-star
@@ -401,7 +431,18 @@ object Dedup {
     */
   def connectedComponentsStars(pairs: DataFrame, ids: DataFrame, idCol: String,
                                aCol: String = "id_a", bCol: String = "id_b",
-                               maxIter: Int = 50): DataFrame = {
+                               maxIter: Int = 50): DataFrame =
+    ids.select(col(idCol).as("id"))
+      .join(starComponents(pairs, aCol, bCol, maxIter), Seq("id"), "left")
+      .groupBy(col("id"))
+      .agg(coalesce(min(col("component")), first(col("id"))).as("component"))
+
+  /** The star-contraction fixpoint of [[connectedComponentsStars]] as
+    * endpoint labels: one (id, component) row per pair-graph node
+    * that is NOT its component's minimum (the star forest has exactly
+    * one edge per leaf, pointing at the root); roots carry no row. */
+  private def starComponents(pairs: DataFrame, aCol: String, bCol: String,
+                             maxIter: Int): DataFrame = {
     val canon = pairs
       .select(col(aCol).as("x"), col(bCol).as("y"))
       .filter(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
@@ -464,11 +505,7 @@ object Dedup {
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponentsStars did not converge in $maxIter rounds")
-    ids.select(col(idCol).as("id"))
-      .join(edges.select(col("u").as("id"), col("v").as("component")),
-        Seq("id"), "left")
-      .groupBy(col("id"))
-      .agg(coalesce(min(col("component")), first(col("id"))).as("component"))
+    edges.select(col("u").as("id"), col("v").as("component"))
   }
 
   /** Fuzzy-dedup SURVIVOR selection: resolve near-duplicate clusters

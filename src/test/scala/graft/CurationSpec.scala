@@ -1,13 +1,17 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti}
 import org.apache.spark.sql.functions._
-import graft.operators.Curation
+import scala.jdk.CollectionConverters._
+import graft.operators.{Curation, Dedup}
 
 /** The fluent curation builder on planted data: each stage removes
   * exactly what it claims to. (The composed output is additionally
   * hash-pinned against DuckDB via the q_curate_e2e oracle.)
   */
-class CurationSpec extends SparkSpec {
+class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   import spark.implicits._
 
@@ -114,6 +118,114 @@ class CurationSpec extends SparkSpec {
       .qualityFilter().nearDedup().decontaminate(eval)
     assert(plain.stageMetrics.isEmpty)
     assert(plain.docs.select("doc_id").as[Long].collect().toSet == Set(1L, 10L))
+  }
+
+  /** Runs `f` and returns the ids of the RDDs that stored a cache
+    * block meanwhile. A marker job flushes the listener queue: events
+    * arrive in order, so its end comes after every earlier block
+    * update. */
+  private def storedRddsDuring[T](f: => T): (T, Set[Int]) = {
+    import org.apache.spark.scheduler._
+    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val group = "curation-spec-flush"
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId match {
+          case org.apache.spark.storage.RDDBlockId(id, _)
+            if e.blockUpdatedInfo.storageLevel.isValid => ids.add(id)
+          case _ =>
+        }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+          e.properties.getProperty("spark.jobGroup.id") == group) markerJobs.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) flushed.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = f
+      spark.sparkContext.setJobGroup(group, "listener flush")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, ids.asScala.toSet)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a duplicated id comes out once per input row, not squared") {
+    val dup = doc(60, 80) // shares no vocabulary with the other docs
+    val evalText = doc(70, 82)
+    val docs = Seq(
+      (1L, doc(60, 81)),
+      (5L, dup), (5L, dup), // one document ingested twice
+      (97L, evalText)       // holdout member
+    ).toDF("doc_id", "text")
+    val cur = Curation(docs, "doc_id", "text")
+    val eval = cur.docs.filter(col("doc_id") === 97L)
+    val out = cur.qualityFilter().nearDedup().decontaminate(eval)
+      .docs.select("doc_id").as[Long].collect().toSeq
+    assert(out.sorted == Seq(1L, 5L, 5L))
+  }
+
+  test("documents with a null id are dropped by nearDedup and decontaminate") {
+    val docs = Seq(
+      (Option(1L), doc(60, 90)),
+      (Option.empty[Long], doc(60, 91)),
+      (Option(97L), doc(70, 92))
+    ).toDF("doc_id", "text")
+    val cur = Curation(docs, "doc_id", "text")
+    val eval = cur.docs.filter(col("doc_id") === 97L)
+    def ids(c: Curation) = c.docs.select("doc_id").as[Option[Long]].collect().toSeq
+    assert(ids(cur.qualityFilter()).size == 3, "the quality filter keeps it")
+    assert(ids(cur.qualityFilter().nearDedup()).sorted == Seq(Some(1L), Some(97L)))
+    assert(ids(cur.qualityFilter().decontaminate(eval)) == Seq(Some(1L)))
+  }
+
+  test("nearDedup and decontaminate anti-join the removed ids: no join-back, no edge persist") {
+    val a = doc(80, 100)
+    val nearA = a.split(" ").toSeq.updated(40, "zzz").mkString(" ")
+    val evalText = doc(70, 101)
+    val leaked = doc(35, 102) + " " + evalText.split(" ").take(10).mkString(" ")
+    // a parquet scan, not a local relation: the join strategies are
+    // planned from file statistics, as on a real corpus
+    val dir = java.nio.file.Files.createTempDirectory("graft_cur_plan").toString
+    Seq((1L, doc(60, 103)), (10L, a), (11L, nearA), (20L, leaked),
+      (97L, evalText)).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(dir)
+    val docs = spark.read.parquet(dir)
+    val filtered = Curation(docs, "doc_id", "text").qualityFilter()
+    val eval = filtered.docs.filter(col("doc_id") === 97L)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (deduped, stored) = storedRddsDuring(filtered.nearDedup())
+    // nearDedup caches only its pair stage's slots, and leaves them
+    // behind: the winnow token relation (read by both self-join sides)
+    // and the pairs (read by the bounded collect) — no edge frame,
+    // not even a transient one
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val pairs = Dedup.winnowJaccardPairsOfWords(filtered.docs, "doc_id", "__w", 3, 4, 0.3)
+    assert(pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert(added.size == 2, s"persisted beyond the pair slots: $added")
+    assert(stored == added, s"cached during nearDedup: $stored, kept: $added")
+    val out = deduped.decontaminate(eval).docs
+    assert(out.collect().map(_.getLong(0)).toSet == Set(1L, 10L))
+    val plan = out.queryExecution.executedPlan
+    val innerSmj = collect(plan) { case j: SortMergeJoinExec if j.joinType == Inner => j }
+    assert(innerSmj.isEmpty, s"inner sort-merge join in the plan:\n$plan")
+    // small inputs plan even a join-back as a broadcast join, so also
+    // rule out any inner join keyed on the document id
+    val idJoins = collect(plan) {
+      case j: BaseJoinExec if j.joinType == Inner &&
+        (j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == "doc_id")) => j
+    }
+    assert(idJoins.isEmpty, s"survivor join-back left in the plan:\n$plan")
+    val nearDedupAnti = collect(plan) {
+      case j: BroadcastHashJoinExec if j.joinType == LeftAnti &&
+        j.rightKeys.exists(_.references.exists(_.name == "__removed")) => j
+    }
+    assert(nearDedupAnti.nonEmpty,
+      s"near-dedup removal is not a broadcast anti-join:\n$plan")
   }
 
   test("spanFilter drops boilerplate-heavy docs; importanceSelect keeps target-like docs") {

@@ -109,6 +109,38 @@ class ExtensionOpsSpec extends SparkSpec {
     assert(gotStars == want)
   }
 
+  test("driver, star and min-label component paths give identical labels") {
+    import spark.implicits._
+    val chain = (100L until 139L).map(i => (Option(i), Option(i + 1)))
+    val pairs = (chain ++ Seq(
+      (Some(200L), Some(201L)), (Some(201L), Some(202L)), (Some(202L), Some(200L)), // triangle
+      (Some(300L), Some(301L)), (Some(301L), Some(300L)), (Some(300L), Some(301L)), // duplicates
+      (Some(400L), Some(400L)), (Some(120L), Some(120L)),                           // self-pairs
+      (None, Some(500L)), (Some(501L), None)                                        // null endpoints
+    )).toDF("id_a", "id_b")
+    val ids = ((100L to 139L) ++ (200L to 202L) ++ Seq(300L, 301L, 400L, 500L, 501L, 600L))
+      .toDF("doc_id")
+    val want = ((100L to 139L).map(_ -> 100L) ++ (200L to 202L).map(_ -> 200L) ++
+      Seq(300L -> 300L, 301L -> 300L, 400L -> 400L, 500L -> 500L, 501L -> 501L,
+        600L -> 600L)).toMap
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+      val rows = df.collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(rows.length == ids.count(), "one row per id")
+      rows.toMap
+    }
+    // driverThreshold = 0 forces the distributed form of each entry
+    // point: stars for Auto, min-label for connectedComponents (whose
+    // round count is the 39-edge chain's diameter)
+    val got = Seq(
+      "auto/driver" -> Dedup.connectedComponentsAuto(pairs, ids, "doc_id"),
+      "auto/stars" -> Dedup.connectedComponentsAuto(pairs, ids, "doc_id",
+        driverThreshold = 0L),
+      "cc/driver" -> Dedup.connectedComponents(pairs, ids, "doc_id", maxIter = 64),
+      "cc/min-label" -> Dedup.connectedComponents(pairs, ids, "doc_id",
+        maxIter = 64, driverThreshold = 0L))
+    got.foreach { case (path, df) => assert(labels(df) == want, path) }
+  }
+
   test("connectedComponentsStars settles a 512-node chain in O(log n) rounds") {
     import spark.implicits._
     // worst case for label propagation: one path of diameter 511 —
@@ -137,6 +169,12 @@ class ExtensionOpsSpec extends SparkSpec {
     val got = Dedup.connectedComponentsStars(pairs, ids, "doc_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want)
+    for (threshold <- Seq(1L << 16, 0L)) {
+      val auto = Dedup.connectedComponentsAuto(pairs, ids, "doc_id",
+          driverThreshold = threshold)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(auto == want, s"Auto at driverThreshold = $threshold")
+    }
   }
 
   test("winnowed fingerprints overlap heavily for near-identical docs") {
