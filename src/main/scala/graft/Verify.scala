@@ -26,10 +26,16 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated name filter for focused local
-    // re-checks (the driver always passes two args = full run)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // optional 3rd arg: comma-separated name filter for focused
+    // re-checks (two args = full run); an unknown name fails fast
+    // instead of silently running nothing
+    val only: Option[Set[String]] = args.lift(2).map { a =>
+      val names = a.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- SparkEntry.queries.keySet
+      require(unknown.isEmpty,
+        s"unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
+      names
+    }
     val cores = GraftSession.cores
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()

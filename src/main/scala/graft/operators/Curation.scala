@@ -125,7 +125,7 @@ final case class Curation private (private val df: DataFrame,
     *
     * Only the removed ids are computed: the pair-graph nodes whose
     * component label is not themselves
-    * ([[Dedup.connectedComponentsAuto]]'s endpoint labels), and the
+    * ([[Dedup.connectedComponents]]'s endpoint labels), and the
     * corpus is left-anti-joined against them — every surviving row
     * passes through once, with no survivor join-back. While the pair
     * graph fits the driver cap the removed set is a local relation
@@ -136,7 +136,7 @@ final case class Curation private (private val df: DataFrame,
                 minJaccard: Double = 0.3): Curation = {
     val pairs = Dedup.winnowJaccardPairsOfWords(
       df, idCol, "__w", shingleLen, window, minJaccard)
-    val removed = Dedup.endpointComponentsAuto(pairs)
+    val removed = Dedup.endpointComponents(pairs)
       .filter(col("id") =!= col("component"))
       .select(col("id").as("__removed"))
     stage("near_dedup",

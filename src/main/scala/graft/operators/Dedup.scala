@@ -231,10 +231,12 @@ object Dedup {
   /** Connected components over an undirected near-dup pair list —
     * the group-resolution step that turns pairwise matches into a
     * canonical keep/drop decision (component label = smallest id in
-    * the group, the conventional survivor).
+    * the group, the conventional survivor). Output: one
+    * (id, component) row per `ids` row; ids outside the pair graph
+    * keep their own id as component.
     *
-    * Size-adaptive, same contract both ways. A near-dup pair graph is
-    * a vanishing fraction of the corpus, so the fast path is ONE
+    * Size-adaptive, same labels both ways. A near-dup pair graph is a
+    * vanishing fraction of the corpus, so the fast path is ONE
     * bounded collect ([[driverComponents]]): at most
     * `driverThreshold / 2` non-null pair rows come back to the driver
     * (each pair is two directed edges, so `driverThreshold` bounds
@@ -245,45 +247,55 @@ object Dedup {
     * the ~10 MB range, the same order as a default broadcast-join
     * build side; raise it only with driver/executor memory to spare.
     *
-    * Beyond the cap: iterative min-label propagation. Each round,
-    * every node lowers its label to the minimum of its own and its
-    * neighbors' labels — one equi-join + one map-combined min
-    * aggregate per round, and labels only ever decrease, so the
-    * fixpoint is exact. Converges in O(component diameter) rounds;
-    * near-dup clusters are star-like (diameter 2-4), so a handful of
-    * shuffles settles even a 100 TB corpus. `localCheckpoint` cuts
-    * the growing lineage each round (the standard iterative-DataFrame
-    * pattern); for pathological chain-shaped components use
-    * [[connectedComponentsStars]], the O(log n)-round alternating
-    * star-contraction form. Spec pins both paths to identical labels.
+    * Beyond the cap: large-star/small-star contraction
+    * ([[starComponents]]), O(log n) rounds whatever the component's
+    * diameter, so a chain-shaped component (linked near-dups across a
+    * corpus, transitive identity edges) converges as fast as a star.
     *
-    * @param ids universe of node ids (isolated nodes keep their own
-    *            id as component)
+    * @param ids universe of node ids
     */
   def connectedComponents(pairs: DataFrame, ids: DataFrame, idCol: String,
                           aCol: String = "id_a", bCol: String = "id_b",
-                          maxIter: Int = 25,
-                          driverThreshold: Long = 1L << 16): DataFrame = {
+                          driverThreshold: Long = 1L << 16): DataFrame =
+    ids.select(col(idCol).as("id"))
+      .join(endpointComponents(pairs, aCol, bCol, driverThreshold), Seq("id"), "left")
+      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+
+  /** [[connectedComponents]]'s labels for the pair endpoints only,
+    * without the join against an id universe: one (id, component) row
+    * per pair-graph node that is not its component's minimum, plus —
+    * under the driver cap — one per minimum (id == component). Callers
+    * that only need the non-survivors (`id =!= component`) read this
+    * instead of labelling the whole corpus; under the cap it is a
+    * local relation. */
+  private[operators] def endpointComponents(
+      pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
+      driverThreshold: Long = 1L << 16): DataFrame = {
     val p = PersistSlots.swap(PairsSlot, pairs)
-    labelIds(ids, idCol, driverComponents(p, aCol, bCol, driverThreshold)
-      .getOrElse(minLabelComponents(p, aCol, bCol, maxIter)))
+    driverComponents(p, aCol, bCol, driverThreshold)
+      .getOrElse(starComponents(p, aCol, bCol, StarMaxRounds))
   }
 
   /** Pair frames share this slot: the bounded collect and the
     * distributed fallback both read them, so the pair plan (a
     * winnow-join-scale subtree) runs once per call, and the next call
     * unpersists the previous copy. */
-  private val PairsSlot = "dedup.autoPairs"
+  private val PairsSlot = "dedup.pairs"
 
-  /** The driver fast path of [[connectedComponents]] and
-    * [[connectedComponentsAuto]]: one `limit(cap + 1).collect()` of
-    * the non-null pair rows, cap = `driverThreshold / 2`. Under the
-    * cap, union-find on the driver gives every pair endpoint its
-    * min-id label, returned as a local (id, component) frame. Over
-    * the cap — or for non-Long endpoints, which the primitive
-    * union-find does not cover — None, and the caller resolves the
-    * same (persisted) pairs with a distributed form. Null endpoints
-    * are inert in every form, so they are dropped up front. */
+  /** Round cap of [[starComponents]]. Star contraction needs
+    * O(log n) rounds (a 512-node chain settles in under 20), so
+    * reaching 50 signals a defect, not a deep graph. */
+  private val StarMaxRounds = 50
+
+  /** The driver fast path of [[connectedComponents]]: one
+    * `limit(cap + 1).collect()` of the non-null pair rows,
+    * cap = `driverThreshold / 2`. Under the cap, union-find on the
+    * driver gives every pair endpoint its min-id label, returned as a
+    * local (id, component) frame. Over the cap — or for non-Long
+    * endpoints, which the primitive union-find does not cover — None,
+    * and the caller resolves the same (persisted) pairs by star
+    * contraction. Null endpoints are inert in both forms, so they are
+    * dropped up front. */
   private def driverComponents(pairs: DataFrame, aCol: String, bCol: String,
                                driverThreshold: Long): Option[DataFrame] = {
     val longIds = Seq(aCol, bCol).forall(c =>
@@ -316,133 +328,27 @@ object Dedup {
     Some(pairs.sparkSession.createDataFrame(labels).toDF("id", "component"))
   }
 
-  /** `ids` left-joined to endpoint labels: ids outside the pair graph
-    * are singletons and keep their own id as component. */
-  private def labelIds(ids: DataFrame, idCol: String,
-                       labels: DataFrame): DataFrame =
-    ids.select(col(idCol).as("id"))
-      .join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-
-  /** Min-label propagation over the endpoints of `pairs` (the
-    * distributed form of [[connectedComponents]]). */
-  private def minLabelComponents(pairs: DataFrame, aCol: String, bCol: String,
-                                 maxIter: Int): DataFrame = {
-    // read by every round's join: persisted for the duration of the
-    // iteration only
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionAll(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().persist()
-    // Iterate ONLY over nodes that appear in some edge: in a near-dup
-    // graph that's a vanishing fraction of the corpus (everything else
-    // is a singleton), so each round checkpoints the matched subgraph,
-    // not the whole id universe — at 100 TB the labels frame is MBs,
-    // not the corpus. Isolated ids re-enter at the end with their own
-    // id as component, shuffle-free beyond one left join.
-    // ids pass through untouched — min/least propagate any orderable
-    // id type, so no narrowing cast
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id")).localCheckpoint()
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxIter) {
-      val nbrMin = edges
-        .join(labels, edges("dst") === labels("id"))
-        .groupBy(col("src")).agg(min(col("component")).as("nmin"))
-      // convergence count rides the SAME job that materializes the
-      // round (an observed metric on the checkpoint action) — one
-      // Spark action per round, not a join + a separate count scan
-      val obs = org.apache.spark.sql.Observation(s"cc_round_$round")
-      val updated = labels
-        .join(nbrMin, labels("id") === nbrMin("src"), "left")
-        .select(labels("id"),
-          labels("component").as("old"),
-          least(labels("component"), coalesce(col("nmin"), labels("component")))
-            .as("component"))
-        .observe(obs, sum(when(col("component") =!= col("old"), 1L)
-          .otherwise(0L)).as("changed"))
-        .localCheckpoint() // eager: cut lineage, materialize this round
-      changed = obs.get("changed").asInstanceOf[Long]
-      labels.unpersist() // previous round's checkpoint blocks released
-      labels = updated
-      round += 1
-    }
-    edges.unpersist()
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          "(component min-distance exceeds maxIter); raise maxIter")
-    labels.select(col("id"), col("component"))
-  }
-
-  /** Size-adaptive component resolution for COMPOSITE operators
-    * (survivor selection, pipelines) whose pair-graph shape is
-    * unknown: the one-collect driver union-find of
-    * [[connectedComponents]] while at most `driverThreshold / 2` pair
-    * rows exist (2 × pair rows, counted before `distinct`, bounded by
-    * `driverThreshold`), large-star/small-star contraction beyond
-    * ([[connectedComponentsStars]] — O(log n) rounds regardless of
-    * diameter). Min-label propagation is NOT in this chooser: its
-    * round count is the component diameter, and a chain-shaped
-    * near-dup component would abort it at maxIter where stars
-    * converges. Both branches emit identical min-id labels. */
-  def connectedComponentsAuto(pairs: DataFrame, ids: DataFrame, idCol: String,
-                              aCol: String = "id_a", bCol: String = "id_b",
-                              driverThreshold: Long = 1L << 16): DataFrame =
-    labelIds(ids, idCol,
-      endpointComponentsAuto(pairs, aCol, bCol, driverThreshold))
-
-  /** [[connectedComponentsAuto]]'s labels for the pair endpoints
-    * only, without the join against an id universe: one
-    * (id, component) row per pair-graph node that is not its
-    * component's minimum, plus — under the driver cap — one per
-    * minimum (id == component). Callers that only need the
-    * non-survivors (`id =!= component`) read this instead of
-    * labelling the whole corpus; under the cap it is a local
-    * relation. */
-  private[operators] def endpointComponentsAuto(
-      pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
-      driverThreshold: Long = 1L << 16): DataFrame = {
-    val p = PersistSlots.swap(PairsSlot, pairs)
-    driverComponents(p, aCol, bCol, driverThreshold)
-      .getOrElse(starComponents(p, aCol, bCol, maxIter = 50))
-  }
-
   /** Connected components by alternating large-star / small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond") — the O(log n)-round upgrade over
-    * [[connectedComponents]]'s min-label propagation, whose round
-    * count is the component DIAMETER. Near-dup clusters are shallow,
-    * so the default operator wins there; chain-shaped graphs (linked
-    * near-dups across a corpus, transitive identity edges) make
-    * diameter O(n) and need this form.
+    * and Beyond") — the distributed form of [[connectedComponents]].
+    * Its round count is O(log n), not the component DIAMETER that
+    * min-label propagation pays.
     *
     * Each round is two conditional re-hangings over the canonical
     * (larger, smaller) edge list: large-star hangs every
     * bigger-than-center neighbor under the neighborhood minimum,
     * small-star re-hangs the smaller neighbors and the center itself.
-    * Both are one hash-aggregate plus one equi-join — the same
-    * shuffle shape as a round of label propagation, but the number of
-    * rounds collapses from diameter to log. Convergence is detected
-    * by an edge-checksum observed on the SAME job that materializes
-    * the round (no extra action); at the fixpoint the edge set is a
-    * star forest rooted at each component's minimum id.
-    */
-  def connectedComponentsStars(pairs: DataFrame, ids: DataFrame, idCol: String,
-                               aCol: String = "id_a", bCol: String = "id_b",
-                               maxIter: Int = 50): DataFrame =
-    ids.select(col(idCol).as("id"))
-      .join(starComponents(pairs, aCol, bCol, maxIter), Seq("id"), "left")
-      .groupBy(col("id"))
-      .agg(coalesce(min(col("component")), first(col("id"))).as("component"))
-
-  /** The star-contraction fixpoint of [[connectedComponentsStars]] as
-    * endpoint labels: one (id, component) row per pair-graph node
-    * that is NOT its component's minimum (the star forest has exactly
-    * one edge per leaf, pointing at the root); roots carry no row. */
-  private def starComponents(pairs: DataFrame, aCol: String, bCol: String,
-                             maxIter: Int): DataFrame = {
+    * Both are one hash-aggregate plus one equi-join. Convergence is
+    * detected by an edge-set witness observed on the SAME job that
+    * materializes the round (no extra action); at the fixpoint the
+    * edge set is a star forest rooted at each component's minimum id.
+    *
+    * Returns endpoint labels: one (id, component) row per pair-graph
+    * node that is NOT its component's minimum (the star forest has
+    * exactly one edge per leaf, pointing at the root); roots carry no
+    * row. Throws if the fixpoint takes more than `maxRounds` rounds. */
+  private[graft] def starComponents(pairs: DataFrame, aCol: String, bCol: String,
+                                    maxRounds: Int): DataFrame = {
     val canon = pairs
       .select(col(aCol).as("x"), col(bCol).as("y"))
       .filter(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
@@ -480,7 +386,7 @@ object Dedup {
     var prevCount = -1L
     var round = 0
     var converged = false
-    while (!converged && round < maxIter) {
+    while (!converged && round < maxRounds) {
       val obs = org.apache.spark.sql.Observation(s"cc_stars_$round")
       // exact convergence witness, still one action per round: count
       // next-edges absent from the previous set via a left join
@@ -504,22 +410,20 @@ object Dedup {
     }
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponentsStars did not converge in $maxIter rounds")
+        s"star contraction did not converge in $maxRounds rounds")
     edges.select(col("u").as("id"), col("v").as("component"))
   }
 
   /** Fuzzy-dedup SURVIVOR selection: resolve near-duplicate clusters
-    * ([[connectedComponentsStars]] over `pairs`) and keep the best
+    * ([[connectedComponents]] over `pairs`) and keep the best
     * document of each cluster by `scoreCol` (ties → smallest id) —
     * the "keep the highest-quality copy" policy real pipelines run
     * instead of min-id-wins, which keeps an arbitrary copy.
     *
     * `docs` must carry `idCol` and an integral `scoreCol` (quality
     * rank, word count, …). Scale shape: the component resolution is
-    * size-adaptive ([[connectedComponentsAuto]]: driver union-find
-    * for tiny pair graphs, star-contraction beyond — never the
-    * diameter-bounded min-label form, whose round cap a chain-shaped
-    * component would hit); the score lookup is an id equi-join at survivor scale
+    * [[connectedComponents]] (driver union-find under the cap, star
+    * contraction over it); the score lookup is an id equi-join at survivor scale
     * (SMJ — both sides ≈ corpus size); the per-cluster argmax is the
     * bounded [[TopK]] partial aggregate, ≤1 row per cluster per task
     * crossing the exchange — never a cluster-partitioned window over
@@ -529,7 +433,7 @@ object Dedup {
                            scoreCol: String,
                            aCol: String = "id_a", bCol: String = "id_b")
   : DataFrame = {
-    val comp = connectedComponentsAuto(pairs, docs, idCol, aCol, bCol)
+    val comp = connectedComponents(pairs, docs, idCol, aCol, bCol)
     val scored = comp.join(
       docs.select(col(idCol).as("id"), col(scoreCol)), Seq("id"))
     TopK.perKey(scored, "component", "id", scoreCol, k = 1)

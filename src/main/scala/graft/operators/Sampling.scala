@@ -396,15 +396,15 @@ object Sampling {
     * form of the contamination [[graft.operators.Decontaminate]]
     * removes at the n-gram level). Components come from the caller's
     * near-dup pair graph (winnow/minhash/embedding — any of the
-    * Dedup candidate generators), resolved by the size-adaptive
-    * router; the split is then the md5 bucket of the COMPONENT
-    * label, so every member of a component lands together by
-    * construction, and the assignment is an engine-portable pure
-    * function of the data ([[hashSample]]'s discipline lifted from
-    * doc ids to component labels).
+    * Dedup candidate generators), resolved by
+    * [[Dedup.connectedComponents]]; the split is then the md5 bucket
+    * of the COMPONENT label, so every member of a component lands
+    * together by construction, and the assignment is an
+    * engine-portable pure function of the data ([[hashSample]]'s
+    * discipline lifted from doc ids to component labels).
     *
     * Scale shape: component resolution is the dominant cost (see
-    * [[Dedup.connectedComponentsAuto]]); the bucket assignment is
+    * [[Dedup.connectedComponents]]); the bucket assignment is
     * one narrow md5 projection. `trainUpTo`/`valUpTo` are bucket
     * thresholds out of `buckets` (defaults: 80/10/10).
     */
@@ -414,7 +414,7 @@ object Sampling {
     require(0 < trainUpTo && trainUpTo <= valUpTo && valUpTo <= buckets,
       s"need 0 < trainUpTo <= valUpTo <= buckets, got " +
         s"$trainUpTo/$valUpTo/$buckets")
-    val comp = Dedup.connectedComponentsAuto(pairs, docs, idCol)
+    val comp = Dedup.connectedComponents(pairs, docs, idCol)
       .select(col("id").as(idCol), col("component"))
     comp.withColumn("__b", Packing.shardId("component", buckets))
       .select(col(idCol), col("component"),

@@ -225,20 +225,20 @@ object DedupQueries {
         .withColumn("yield_e4", expr("unique_tok * 10000 div raw_tok"))
     }),
 
-    // the same group resolution via large-star/small-star contraction
-    // — O(log n) rounds instead of O(diameter), the form that
-    // survives chain-shaped components; same recursive-reachability
-    // oracle as dedup_components
+    // the same group resolution forced onto its distributed form
+    // (driverThreshold = 0: large-star/small-star contraction, the
+    // path every pair graph over the driver cap takes); same
+    // recursive-reachability oracle as dedup_components
     "dedup_components_stars" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
       val pairs = Dedup.winnowJaccardPairs(docs, "doc_id", "text",
         shingleLen = 3, window = 4, minJaccard = 0.3)
-      Dedup.connectedComponentsStars(pairs, docs, "doc_id")
+      Dedup.connectedComponents(pairs, docs, "doc_id", driverThreshold = 0L)
         .select(col("id").as("doc_id"), col("component"))
     }),
 
     // fuzzy-dedup survivor selection: same clusters as
-    // dedup_components_stars, but each cluster keeps its
+    // dedup_components, but each cluster keeps its
     // highest-quality copy (word count, min-id tiebreak) via the
     // bounded top-1 aggregate — the keep-best policy on top of the
     // component resolution

@@ -46,9 +46,8 @@ object Tables {
     * matter, a bounded multiple of what the scan would do naturally,
     * and identical plans at 8 and 32 cores for the driver's
     * single-split bench inputs (so the scaling ratio measures the
-    * engine, not a partition-count delta). Tune with
-    * spark.graft.scan.fanout.splitFactor; production inputs are
-    * many-split so the factor is irrelevant there by construction.
+    * engine, not a partition-count delta). Production inputs are
+    * many-split, so the factor is irrelevant there by construction.
     *
     * The redistribution is a HASH repartition on the table's leading
     * column (every driver table leads with its key: doc_id,
@@ -72,17 +71,13 @@ object Tables {
     * aggregation that removes them), and any future consumer that
     * would expose one must derive its salt deterministically
     * (pmod(xxhash64(key), n) — guide §2.5) instead of from rand.
-    * Disable with spark.graft.scan.fanout=false (conf or env
-    * SPARK_GRAFT_SCAN_FANOUT) to reproduce the old single-task
-    * plans.
     */
   private val FanoutBytesPerTask = 64L * 1024
 
   /** Cap = naturalSplits × this (see the scaladoc above). 8 keeps a
     * single-split bench input at 8 tasks — the count the driver's
     * c8/c32 scaling pair showed winning at BOTH core counts — while
-    * a 4-split input may still fan to 32. Conf:
-    * spark.graft.scan.fanout.splitFactor. */
+    * a 4-split input may still fan to 32. */
   private val FanoutSplitFactor = 8L
 
   /** Tables fanned out BY DEFAULT: the corpora whose consumers do
@@ -92,22 +87,8 @@ object Tables {
     * scan-bound queries (q1_agg 0.35 s, q_sql_q6 0.15 s) pay more
     * for the extra exchange than the single-task scan costs
     * (measured +0.15-0.3 s each), while their few compute-heavy
-    * consumers opt in per call site via [[fanned]]. Override with
-    * spark.graft.scan.fanout.tables (csv). */
-  private val DefaultFanoutTables = Set("documents", "embeddings")
-
-  private def fanoutEnabled(spark: SparkSession, name: String,
-                            forced: Boolean): Boolean = {
-    val master = spark.conf
-      .getOption("spark.graft.scan.fanout")
-      .orElse(sys.env.get("SPARK_GRAFT_SCAN_FANOUT"))
-      .forall(_.trim.equalsIgnoreCase("true"))
-    val tables = spark.conf
-      .getOption("spark.graft.scan.fanout.tables")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(DefaultFanoutTables)
-    master && (forced || tables.contains(name))
-  }
+    * consumers opt in per call site via [[fanned]]. */
+  private val FanoutTables = Set("documents", "embeddings")
 
   private def fanout(spark: SparkSession, df: DataFrame,
                      bytes: Long): DataFrame = {
@@ -115,13 +96,9 @@ object Tables {
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
     val scanSplits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
-    val splitFactor = spark.conf
-      .getOption("spark.graft.scan.fanout.splitFactor")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(FanoutSplitFactor)
     val target = math.min(
       math.min(spark.sparkContext.defaultParallelism.toLong,
-        scanSplits * splitFactor),
+        scanSplits * FanoutSplitFactor),
       math.max(1L, bytes / FanoutBytesPerTask))
     if (scanSplits >= target || target <= 1) df
     else df.repartition(target.toInt, col(df.columns.head))
@@ -130,7 +107,7 @@ object Tables {
   private def sizedRead(spark: SparkSession, path: String,
                         name: String, forced: Boolean): DataFrame = {
     val df = spark.read.parquet(path)
-    if (!fanoutEnabled(spark, name, forced)) return df
+    if (!forced && !FanoutTables.contains(name)) return df
     val bytes =
       try {
         val p = new org.apache.hadoop.fs.Path(path)

@@ -97,19 +97,15 @@ class ExtensionOpsSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L,
       30L -> 30L, 31L -> 30L, 32L -> 30L, 33L -> 30L, 34L -> 30L)
     assert(got == want)
-    // the distributed iterative path (forced via driverThreshold = 0)
-    // must produce identical labels to the driver union-find path
+    // the star-contraction path (forced via driverThreshold = 0) must
+    // produce identical labels to the driver union-find path
     val gotIter = Dedup.connectedComponents(pairs, ids, "doc_id",
         driverThreshold = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotIter == want)
-    // and the star-contraction form agrees on the same graph
-    val gotStars = Dedup.connectedComponentsStars(pairs, ids, "doc_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gotStars == want)
   }
 
-  test("driver, star and min-label component paths give identical labels") {
+  test("driver and star component paths give identical labels") {
     import spark.implicits._
     val chain = (100L until 139L).map(i => (Option(i), Option(i + 1)))
     val pairs = (chain ++ Seq(
@@ -123,40 +119,36 @@ class ExtensionOpsSpec extends SparkSpec {
     val want = ((100L to 139L).map(_ -> 100L) ++ (200L to 202L).map(_ -> 200L) ++
       Seq(300L -> 300L, 301L -> 300L, 400L -> 400L, 500L -> 500L, 501L -> 501L,
         600L -> 600L)).toMap
-    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
-      val rows = df.collect().map(r => r.getLong(0) -> r.getLong(1))
-      assert(rows.length == ids.count(), "one row per id")
-      rows.toMap
+    // driverThreshold = 0 forces star contraction
+    for ((path, threshold) <- Seq("driver" -> (1L << 16), "stars" -> 0L)) {
+      val rows = Dedup.connectedComponents(pairs, ids, "doc_id",
+          driverThreshold = threshold)
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(rows.length == ids.count(), s"$path: one row per id")
+      assert(rows.toMap == want, path)
     }
-    // driverThreshold = 0 forces the distributed form of each entry
-    // point: stars for Auto, min-label for connectedComponents (whose
-    // round count is the 39-edge chain's diameter)
-    val got = Seq(
-      "auto/driver" -> Dedup.connectedComponentsAuto(pairs, ids, "doc_id"),
-      "auto/stars" -> Dedup.connectedComponentsAuto(pairs, ids, "doc_id",
-        driverThreshold = 0L),
-      "cc/driver" -> Dedup.connectedComponents(pairs, ids, "doc_id", maxIter = 64),
-      "cc/min-label" -> Dedup.connectedComponents(pairs, ids, "doc_id",
-        maxIter = 64, driverThreshold = 0L))
-    got.foreach { case (path, df) => assert(labels(df) == want, path) }
   }
 
-  test("connectedComponentsStars settles a 512-node chain in O(log n) rounds") {
+  test("star contraction settles a 512-node chain in O(log n) rounds") {
     import spark.implicits._
     // worst case for label propagation: one path of diameter 511 —
-    // min-label needs >500 rounds, star contraction a handful
+    // min-label would need >500 rounds, star contraction a handful
     val n = 512
     val pairs = (0 until n - 1).map(i => (i.toLong, (i + 1).toLong))
       .toDF("id_a", "id_b")
     val ids = (0L until n.toLong).toDF("doc_id")
-    // maxIter = 20 FAILS unless round count is logarithmic
-    val got = Dedup.connectedComponentsStars(pairs, ids, "doc_id",
-        maxIter = 20)
+    // a 20-round cap FAILS unless the round count is logarithmic; the
+    // root (0) carries no endpoint row
+    val stars = Dedup.starComponents(pairs, "id_a", "id_b", maxRounds = 20)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(stars == (1L until n.toLong).map(_ -> 0L).toMap)
+    // the operator over the driver cap takes the same path
+    val got = Dedup.connectedComponents(pairs, ids, "doc_id", driverThreshold = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == (0L until n.toLong).map(_ -> 0L).toMap)
   }
 
-  test("connectedComponentsStars equals union-find labels on a random graph") {
+  test("connectedComponents equals union-find labels on a random graph at both thresholds") {
     import spark.implicits._
     val rnd = new scala.util.Random(4242)
     val nNodes = 300L
@@ -164,16 +156,20 @@ class ExtensionOpsSpec extends SparkSpec {
       (rnd.nextLong(nNodes), rnd.nextLong(nNodes))
     }.filter(p => p._1 != p._2).toDF("id_a", "id_b")
     val ids = (0L until nNodes).toDF("doc_id")
-    val want = Dedup.connectedComponents(pairs, ids, "doc_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val got = Dedup.connectedComponentsStars(pairs, ids, "doc_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want)
+    // reference labels: a plain union-find in the test, independent of
+    // the operator's own driver path
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = parent.get(x).filter(_ != x).map(find).getOrElse(x)
+    pairs.collect().foreach { r =>
+      val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val want = (0L until nNodes).map(i => i -> find(i)).toMap
     for (threshold <- Seq(1L << 16, 0L)) {
-      val auto = Dedup.connectedComponentsAuto(pairs, ids, "doc_id",
+      val got = Dedup.connectedComponents(pairs, ids, "doc_id",
           driverThreshold = threshold)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(auto == want, s"Auto at driverThreshold = $threshold")
+      assert(got == want, s"driverThreshold = $threshold")
     }
   }
 

@@ -52,8 +52,12 @@ class KnnGraphSpec extends SparkSpec {
     }
     // recall vs brute-force top-3 (neighbor sets, all ids)
     val hits = byId.map { case (id, rows) =>
-      val brute = vecs.keys.filter(_ != id).toSeq
-        .sortBy(nb => (-round6(cos(vecs(id), vecs(nb))), nb)).take(3).toSet
+      // one (key, id) per candidate, then sort: sortBy would recompute
+      // the cosine and its rounding on every comparison
+      val q = vecs(id)
+      val brute = vecs.iterator
+        .collect { case (nb, v) if nb != id => (-round6(cos(q, v)), nb) }
+        .toArray.sorted.take(3).map(_._2).toSet
       rows.map(_._2).count(brute.contains).toDouble / 3.0
     }
     val recall = hits.sum / vecs.size // ids with no candidates score 0
