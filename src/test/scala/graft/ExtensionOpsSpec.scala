@@ -148,7 +148,7 @@ class ExtensionOpsSpec extends SparkSpec {
     assert(got == (0L until n.toLong).map(_ -> 0L).toMap)
   }
 
-  test("connectedComponents equals union-find labels on a random graph at both thresholds") {
+  test("connectedComponents equals union-find on a random graph at both thresholds") {
     import spark.implicits._
     val rnd = new scala.util.Random(4242)
     val nNodes = 300L
