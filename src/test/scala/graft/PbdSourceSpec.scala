@@ -5,13 +5,24 @@ import graft.operators.{ClusionInput, Flatten}
 import graft.sources.pbd.PbdSource
 import ClusionInput._
 
-/** from_pbd against the reference's golden binary fixture
-  * (bamboo_tests/data/example.pbd: ONE record whose repeated fields
-  * drive the flatten) with the expectations of pbd_tests.py:62-92.
+/** from_pbd against the expectations of pbd_tests.py:62-92, decoded
+  * from the committed fixture `src/test/resources/pbd/example.pbd`:
+  * ONE record whose repeated fields drive the flatten. The fixture is
+  * a protobuf-java re-encoding of FIXTURES.md §5's record by
+  * [[PbdFixtures]], not the reference's own byte stream; its field
+  * numbers, package names and enum tables are reconstructed. Where the
+  * reference's `example.pbd` exists, a guarded test checks that it
+  * decodes to the same rows.
   */
 class PbdSourceSpec extends SparkSpec {
 
-  private val example = "/root/reference/python/bamboo_tests/data/example.pbd"
+  private def fixture(name: String): String =
+    java.nio.file.Paths.get(getClass.getResource(s"/pbd/$name").toURI).toString
+
+  private val example = fixture("example.pbd")
+  private val perfExample = fixture("perf_example.pbd")
+  private val referenceExample =
+    java.nio.file.Paths.get("/root/reference/python/bamboo_tests/data/example.pbd")
 
   private def read(include: ClusionInput = Empty, exclude: ClusionInput = Empty) =
     PbdSource.read(spark, example, include, exclude)
@@ -69,6 +80,33 @@ class PbdSourceSpec extends SparkSpec {
     assertThrows[IllegalArgumentException](Flatten.flatten(read()))
   }
 
+  test("committed pbd fixtures equal the PbdFixtures generator output") {
+    def committed(p: String) = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))
+    assert(java.util.Arrays.equals(committed(example), PbdFixtures.example),
+      "example.pbd drifted from PbdFixtures; regenerate it")
+    assert(java.util.Arrays.equals(committed(perfExample), PbdFixtures.perfExample),
+      "perf_example.pbd drifted from PbdFixtures; regenerate it")
+    val perf = PbdSource.parseFile(committed(perfExample))
+    assert(perf.records.map(_.length).toSeq == Seq(PbdFixtures.PerfRecordBytes))
+  }
+
+  test("reference example.pbd decodes to the committed fixture's rows") {
+    assume(java.nio.file.Files.exists(referenceExample),
+      s"$referenceExample is absent")
+    // compared by column name and as strings, so the reconstructed
+    // field order and integer widths need not match the reference's
+    def rows(path: String, include: ClusionInput, exclude: ClusionInput) = {
+      val flat = Flatten.flatten(PbdSource.read(spark, path),
+        include = include, exclude = exclude)
+      flat.select(flat.columns.sorted.map(c => col(c).cast("string")).toSeq: _*)
+        .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    }
+    Seq[(ClusionInput, ClusionInput)]((Empty, "rm"), ("rm", Empty)).foreach {
+      case (in, ex) =>
+        assert(rows(referenceExample.toString, in, ex) == rows(example, in, ex))
+    }
+  }
+
   test("PbdWriter round-trip: written container decodes to the source rows") {
     import graft.sources.pbd.{PbdWriter, PbdDescriptors}
     val fields = Seq(
@@ -98,11 +136,11 @@ class PbdSourceSpec extends SparkSpec {
   }
 
   test("perf floor: 100k records decode distributed well under the ref bound") {
-    // replicate perf_example.pbd's record the way pbd_tests.py:42-60
-    // does, then decode; the reference asserts 1M records < 5 s
-    // single-threaded
+    // replicate the committed perf_example.pbd's one record the way
+    // pbd_tests.py:42-60 does, then decode; the reference asserts 1M
+    // records < 5 s single-threaded
     val bytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/python/bamboo_tests/data/perf_example.pbd"))
+      java.nio.file.Paths.get(perfExample))
     val parsed = PbdSource.parseFile(bytes)
     assert(parsed.records.length == 1)
     val rec = parsed.records(0)
