@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graftglue.Bridge
 import graft.operators.{ClusionInput, Clusions, ColumnFilter}
 
 /** Readers with decode-time column pruning: include/exclude clusions
@@ -22,6 +23,14 @@ import graft.operators.{ClusionInput, Clusions, ColumnFilter}
   *    covers its whole subtree; an explicit exclude cuts an
   *    inherited include, but deeper explicit includes revive their
   *    branch (exclude='oa', include=[{}, 'oa.ia'] keeps oa.ia).
+  *
+  * Opening a source resolves its full schema before pruning it. The
+  * parquet, ORC, Avro, Arrow and PBD readers resolve it on the driver
+  * from the format's own metadata (a parquet or ORC footer, the Avro
+  * writer schema, the Arrow schema message, the PBD descriptor
+  * header) and start no Spark job; parquet's schema merging, when the
+  * session turns it on, is the exception. `readJson`'s inference is a
+  * full-scan job, one per call, which passing `schema` skips.
   */
 object Sources {
   import ClusionInput.Empty
@@ -40,9 +49,60 @@ object Sources {
   def readParquet(spark: SparkSession, path: String,
                   include: ClusionInput = Empty,
                   exclude: ClusionInput = Empty): DataFrame = {
-    val full = spark.read.parquet(path).schema // footer-only read
+    val full = parquetSchema(spark, path)
     val pruned = pruneSchema(full, validatedFilter(full, include, exclude))
     spark.read.schema(pruned).parquet(path)
+  }
+
+  /** The schema `spark.read.parquet(path).schema` resolves, read on
+    * the driver. With mergeSchema off, Spark's inference reads one
+    * footer: `_common_metadata`, else `_metadata`, else the first data
+    * file by path (`ParquetUtils.inferSchema`). It does so in a
+    * one-task job whose closure ships the whole Hadoop configuration;
+    * this reads the same footer in place. Globbing, the missing-path
+    * check, the hidden-file filter and partition discovery are Spark's
+    * own (`DataSource`, `InMemoryFileIndex`), so errors and partition
+    * columns are unchanged. Merging schemas must read every footer,
+    * and there Spark's parallel job is kept, as it is for a streaming
+    * sink's output, which Spark lists from its metadata log.
+    */
+  private[graft] def parquetSchema(spark: SparkSession, path: String): StructType = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE,
+      PARQUET_METADATA_FILE}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex,
+      PartitioningUtils}
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetFooterReader, ParquetToSparkSchemaConverter}
+    import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
+    val sqlConf = Bridge.sqlConf(spark)
+    val hadoopConf = Bridge.hadoopConf(spark)
+    if (sqlConf.isParquetSchemaMergingEnabled ||
+      FileStreamSink.hasMetadata(Seq(path), hadoopConf, sqlConf)) {
+      spark.read.parquet(path).schema
+    } else {
+      val index = new InMemoryFileIndex(spark, Bridge.globbedPaths(path, hadoopConf),
+        Map.empty, None, FileStatusCache.getOrCreate(spark))
+      val files = index.allFiles().sortBy(_.getPath.toString)
+      val summaries = Seq(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
+      val toTouch = summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+        .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      val footer = toTouch.flatMap { f =>
+        try Some(new Footer(f.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)))
+        catch { // what Spark's footer reader catches, and how
+          case _: RuntimeException if sqlConf.ignoreCorruptFiles => None
+          case e: RuntimeException => throw Bridge.cannotReadFooter(f.getPath, e)
+        }
+      }
+      val data = footer.map(ParquetFileFormat.readSchemaFromFooter(_,
+        new ParquetToSparkSchemaConverter(sqlConf)))
+        .getOrElse(throw Bridge.unableToInferSchema("Parquet"))
+      PartitioningUtils.mergeDataAndPartitionSchema(Bridge.asNullable(data),
+        index.partitionSchema, sqlConf.caseSensitiveAnalysis)._1
+    }
   }
 
   def readOrc(spark: SparkSession, path: String,

@@ -43,6 +43,11 @@ import PbdDescriptors._
 object PbdSource {
   private val MAGIC = 0x000010bd
 
+  /** One defaults-only Hadoop Configuration per JVM for the decode
+    * tasks' file opens: `new Configuration()` re-parses the default
+    * XML resources, which cost every task milliseconds. */
+  private lazy val taskHadoopConf = new org.apache.hadoop.conf.Configuration()
+
   final case class PbdFile(registry: Registry, root: PMessage,
                            records: Array[Array[Byte]])
 
@@ -310,7 +315,7 @@ object PbdSource {
           s"PBD chunk of $len bytes exceeds a task buffer; " +
             "records this large need a smaller targetChunk")
         val hPath = new org.apache.hadoop.fs.Path("file:" + file)
-        val fs = hPath.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        val fs = hPath.getFileSystem(taskHadoopConf)
         val in = fs.open(hPath)
         val buf = new Array[Byte](len.toInt)
         try { in.seek(chunkStart); in.readFully(buf) } finally in.close()
