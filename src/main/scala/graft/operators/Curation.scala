@@ -27,9 +27,10 @@ import graft.functions.TextFunctions.words
   * they remove, so their only extra corpus read is the pair/gram
   * branch that finds those ids. The chain is lazy EXCEPT
   * [[nearDedup]] (component resolution runs at builder-call time: one
-  * bounded collect of the pair frame, which it persists in a single
-  * session slot, or the distributed fallback's rounds beyond the
-  * driver cap) and [[importanceSelect]] (two bucket-count
+  * job checkpoints and counts the pair frame, then a collect of that
+  * checkpoint under the driver cap, or the distributed fallback's
+  * rounds beyond it, resolves the components; the checkpoint is freed
+  * before the call returns) and [[importanceSelect]] (two bucket-count
   * aggregations collect at call time to build the vote table) —
   * everything else defers until the caller acts on the result.
   * `q_curate_e2e` is this builder's output verbatim and carries the

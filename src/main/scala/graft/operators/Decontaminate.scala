@@ -12,7 +12,7 @@ import graft.functions.TextFunctions.{words, shinglesOfWords}
   * Scale shape: both sides reduce to distinct `(id, ngram)` pairs;
   * the contaminated set is an equi-join on the ngram. The eval side
   * is tiny by construction (benchmarks are thousands of documents,
-  * the corpus is billions), so its distinct ngram set is broadcast —
+  * the corpus is billions), so its ngrams are broadcast —
   * the 100 TB plan is one broadcast hash join over the train scan
   * plus one map-combined aggregation per train doc. Nothing shuffles
   * the corpus on text.
@@ -27,18 +27,18 @@ object Decontaminate {
 
   /** The contamination evidence itself: one `(id, gram)` row per
     * distinct train-document n-gram that also occurs in `eval` (the
-    * train gram scan ⋈ the broadcast distinct eval grams). Clean
-    * documents have no row, so an anti-join on `id` decontaminates
-    * without annotating — or re-joining — the whole train set. */
+    * train gram scan left-semi-joined against the broadcast eval
+    * grams: a semi-join emits each train row at most once, so the eval
+    * side needs no distinct aggregate). Clean documents have no row,
+    * so an anti-join on `id` decontaminates without annotating — or
+    * re-joining — the whole train set. */
   private[operators] def overlapHitsOfWords(train: DataFrame, eval: DataFrame,
                                             idCol: String, wordsCol: String,
-                                            n: Int): DataFrame = {
-    val evalGrams = broadcast(
-      gramsOfWords(eval, idCol, wordsCol, n).select(col("gram")).distinct())
+                                            n: Int): DataFrame =
     gramsOfWords(train, idCol, wordsCol, n)
-      .join(evalGrams, Seq("gram"))
+      .join(broadcast(gramsOfWords(eval, idCol, wordsCol, n).select(col("gram"))),
+        Seq("gram"), "left_semi")
       .select(col("id"), col("gram"))
-  }
 
   /** Per-train-document contamination report: `n_shared` distinct
     * eval ngrams found in the document and a 0/1 `contaminated`

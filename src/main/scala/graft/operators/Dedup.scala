@@ -235,17 +235,19 @@ object Dedup {
     * (id, component) row per `ids` row; ids outside the pair graph
     * keep their own id as component.
     *
-    * Size-adaptive, same labels both ways. A near-dup pair graph is a
-    * vanishing fraction of the corpus, so the fast path is ONE
-    * bounded collect ([[driverComponents]]): at most
-    * `driverThreshold / 2` non-null pair rows come back to the driver
-    * (each pair is two directed edges, so `driverThreshold` bounds
-    * 2 × pair rows before any `distinct`), one union-find pass labels
-    * them, and the labels join `ids` as a local relation that
-    * broadcasts on its own exact size — zero extra shuffles. The
-    * default threshold (2^16) keeps the collected pairs and labels in
-    * the ~10 MB range, the same order as a default broadcast-join
-    * build side; raise it only with driver/executor memory to spare.
+    * Size-adaptive, same labels both ways. The pair plan runs once: a
+    * `localCheckpoint` of the non-null pairs whose row count an
+    * observation reads on the same job, freed before the call returns.
+    * A near-dup pair graph is a vanishing fraction of the corpus, so
+    * the fast path collects that checkpoint ([[driverComponents]])
+    * when it holds at most `driverThreshold / 2` rows (each pair is
+    * two directed edges, so `driverThreshold` bounds 2 × pair rows
+    * before any `distinct`); one union-find pass labels them, and the
+    * labels join `ids` as a local relation that broadcasts on its own
+    * exact size — zero extra shuffles. The default threshold (2^16)
+    * keeps the collected pairs and labels in the ~10 MB range, the
+    * same order as a default broadcast-join build side; raise it only
+    * with driver/executor memory to spare.
     *
     * Beyond the cap: large-star/small-star contraction
     * ([[starComponents]]), O(log n) rounds whatever the component's
@@ -271,44 +273,44 @@ object Dedup {
   private[operators] def endpointComponents(
       pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
       driverThreshold: Long = 1L << 16): DataFrame = {
-    val p = PersistSlots.swap(PairsSlot, pairs)
-    driverComponents(p, aCol, bCol, driverThreshold)
-      .getOrElse(starComponents(p, aCol, bCol, StarMaxRounds))
+    // null endpoints are inert in both forms, so they are dropped up front
+    val obs = org.apache.spark.sql.Observation()
+    val p = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull)
+      .observe(obs, count(lit(1)).as("n"))
+      .localCheckpoint()
+    val cap = math.max(0L, math.min(driverThreshold / 2, Int.MaxValue - 1L))
+    val longIds = p.schema.forall(_.dataType == org.apache.spark.sql.types.LongType)
+    try
+      if (longIds && obs.get("n").asInstanceOf[Long] <= cap) driverComponents(p)
+      else starComponents(p, "a", "b", StarMaxRounds)
+    finally
+      // both forms are done with the checkpoint once they return:
+      // driver labels are a local relation, star contraction's result
+      // reads its own last round
+      p.queryExecution.analyzed.collectFirst {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      }.foreach(_.unpersist(blocking = false))
   }
-
-  /** Pair frames share this slot: the bounded collect and the
-    * distributed fallback both read them, so the pair plan (a
-    * winnow-join-scale subtree) runs once per call, and the next call
-    * unpersists the previous copy. */
-  private val PairsSlot = "dedup.pairs"
 
   /** Round cap of [[starComponents]]. Star contraction needs
     * O(log n) rounds (a 512-node chain settles in under 20), so
     * reaching 50 signals a defect, not a deep graph. */
   private val StarMaxRounds = 50
 
-  /** The driver fast path of [[connectedComponents]]: one
-    * `limit(cap + 1).collect()` of the non-null pair rows,
-    * cap = `driverThreshold / 2`. Under the cap, union-find on the
-    * driver gives every pair endpoint its min-id label, returned as a
-    * local (id, component) frame. Over the cap — or for non-Long
-    * endpoints, which the primitive union-find does not cover — None,
-    * and the caller resolves the same (persisted) pairs by star
-    * contraction. Null endpoints are inert in both forms, so they are
-    * dropped up front. */
-  private def driverComponents(pairs: DataFrame, aCol: String, bCol: String,
-                               driverThreshold: Long): Option[DataFrame] = {
-    val longIds = Seq(aCol, bCol).forall(c =>
-      pairs.schema(c).dataType == org.apache.spark.sql.types.LongType)
-    if (!longIds) return None
-    val cap = math.max(0L, math.min(driverThreshold / 2, Int.MaxValue - 1L)).toInt
-    val es = pairs.select(col(aCol), col(bCol))
-      .filter(col(aCol).isNotNull && col(bCol).isNotNull)
-      .limit(cap + 1)
+  /** The driver fast path of [[connectedComponents]], for a
+    * checkpointed non-null Long pair frame (a, b) whose row count is
+    * known to be at most the cap (`driverThreshold / 2`): collect it,
+    * and union-find on the driver gives every pair endpoint its min-id
+    * label, returned as a local (id, component) frame. Over the cap —
+    * or for non-Long endpoints, which the primitive union-find does
+    * not cover — the caller resolves the same checkpoint by star
+    * contraction instead. */
+  private def driverComponents(pairs: DataFrame): DataFrame = {
+    val es = pairs
       .as[(Long, Long)](org.apache.spark.sql.Encoders.tuple(
         org.apache.spark.sql.Encoders.scalaLong,
         org.apache.spark.sql.Encoders.scalaLong)).collect()
-    if (es.length > cap) return None
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var r = x
@@ -325,7 +327,7 @@ object Dedup {
     // larger root at the smaller one)
     val labels = es.iterator.flatMap(e => Iterator(e._1, e._2)).toSet[Long]
       .toSeq.map(v => v -> find(v))
-    Some(pairs.sparkSession.createDataFrame(labels).toDF("id", "component"))
+    pairs.sparkSession.createDataFrame(labels).toDF("id", "component")
   }
 
   /** Connected components by alternating large-star / small-star
@@ -442,28 +444,26 @@ object Dedup {
   }
 
   /** Shared Jaccard tail over a distinct `(id, token)` relation:
-    * per-id set sizes, shared-token self-join for intersections, and
-    * the exact |A∩B| / (|A|+|B|-|A∩B|) ratio rounded to 4 dp (the
-    * oracle-portable arithmetic). The relation is persisted because
-    * it feeds both join sides plus the count — single-slot, so the
-    * next jaccard invocation unpersists this copy instead of
-    * stacking caches until session end.
+    * shared-token self-join for intersections and the exact
+    * |A∩B| / (|A|+|B|-|A∩B|) ratio rounded to 4 dp (the
+    * oracle-portable arithmetic). Each token row carries its id's set
+    * size as a window count over the id — the set-similarity-join
+    * shape where verification data rides the filter side — so the
+    * pair aggregate already holds both sizes: no per-id count
+    * aggregate, no join back, no persist. The window counts exactly
+    * the rows a per-id count would, so the result is exact for any
+    * `(id, tok)` relation, duplicated ids and null tokens included.
+    * Both self-join sides are the same subtree, so a shuffled join
+    * reuses one exchange for both.
     */
-  private def jaccardFromTokens(tokens: DataFrame, minJaccard: Double,
-                                slot: String): DataFrame = {
-    // slot is per CALLING OPERATOR: winnow and the capped jaccard can
-    // appear in one composed pipeline before either is evaluated, and
-    // a shared slot would let the second swap evict the first's cache
-    // mid-build (silent 3x recompute of the shingle pipeline)
-    val t = PersistSlots.swap(slot, tokens)
-    val counts = t.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val inter = t.select(col("id").as("id_a"), col("tok"))
-      .join(t.select(col("id").as("id_b"), col("tok")), Seq("tok"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(counts.select(col("id").as("id_a"), col("n").as("na")), "id_a")
-      .join(counts.select(col("id").as("id_b"), col("n").as("nb")), "id_b")
+  private[graft] def jaccardFromTokens(tokens: DataFrame, minJaccard: Double): DataFrame = {
+    val t = tokens.select(col("id"), col("tok"), count(lit(1)).over(
+      org.apache.spark.sql.expressions.Window.partitionBy(col("id"))).as("n"))
+    t.as("a").join(t.as("b"), col("a.tok") === col("b.tok"))
+      .filter(col("a.id") < col("b.id"))
+      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        col("a.n").as("na"), col("b.n").as("nb"))
+      .agg(count(lit(1)).as("inter"))
       .withColumn("jaccard",
         round(col("inter").cast("double") / (col("na") + col("nb") - col("inter")), 4))
       .filter(col("jaccard") >= minJaccard)
@@ -599,8 +599,10 @@ object Dedup {
         raw.withColumn("__df", count(lit(1)).over(
             org.apache.spark.sql.expressions.Window.partitionBy(col("tok"))))
           .filter(col("__df") <= maxDocFreq).drop("__df")
-    // own slot (see jaccardFromTokens): containment can compose with
-    // the jaccard/winnow operators in one pipeline
+    // own slot: containment can compose with other slot-persisting
+    // dedup operators in one pipeline before either is evaluated, and
+    // a shared slot would let the second swap evict the first's cache
+    // mid-build
     val t = PersistSlots.swap("dedup.containTokens", capped)
     val counts = t.groupBy(col("id")).agg(count(lit(1)).as("n"))
     val inter = t.select(col("id").as("id_a"), col("tok"))
@@ -644,7 +646,7 @@ object Dedup {
         .select(col("id"), shingleHashes48(col("__sh")).as("__hs"))
         .select(col("id"),
           explode(array_distinct(winnowedMins(col("__hs"), window))).as("tok")),
-      minJaccard, "dedup.winnowTokens")
+      minJaccard)
 
   /** Fuzzy near-dup pairs by Levenshtein distance over normalized
     * text prefixes, with length-bucket banding so candidates meet via
@@ -722,16 +724,7 @@ object Dedup {
         raw.withColumn("__df", count(lit(1)).over(
             org.apache.spark.sql.expressions.Window.partitionBy(col("tok"))))
           .filter(col("__df") <= maxDocFreq).drop("__df")
-    // two slots, not one and not one-per-cap: capped and uncapped
-    // token relations are different plans, so a SHARED slot thrashes
-    // (the bench alternating them turned every median-of-3 run
-    // cold), while a slot per cap VALUE would stack a persisted
-    // corpus-scale relation per setting in a cap-tuning sweep. A
-    // sweep over caps reuses the single "capped" slot (each new cap
-    // evicts the previous — recompute, never accumulation).
-    val slot = if (maxDocFreq == Int.MaxValue) "dedup.ngramTokens.uncapped"
-               else "dedup.ngramTokens.capped"
-    jaccardFromTokens(capped, minJaccard, slot)
+    jaccardFromTokens(capped, minJaccard)
   }
 
   /** Exact duplicated-span detection at token granularity: a run of

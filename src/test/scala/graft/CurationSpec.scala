@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
-import graft.operators.{Curation, Dedup}
+import graft.operators.Curation
 
 /** The fluent curation builder on planted data: each stage removes
   * exactly what it claims to. (The composed output is additionally
@@ -121,12 +121,13 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   /** Runs `f` and returns the ids of the RDDs that stored a cache
-    * block meanwhile. A marker job flushes the listener queue: events
-    * arrive in order, so its end comes after every earlier block
-    * update. */
-  private def storedRddsDuring[T](f: => T): (T, Set[Int]) = {
+    * block meanwhile, and the number of Spark jobs it started. A
+    * marker job flushes the listener queue: events arrive in order, so
+    * its end comes after every earlier job start and block update. */
+  private def sparkActivityDuring[T](f: => T): (T, Set[Int], Int) = {
     import org.apache.spark.scheduler._
     val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
     val group = "curation-spec-flush"
     val flushed = new java.util.concurrent.CountDownLatch(1)
     val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
@@ -140,6 +141,7 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null &&
           e.properties.getProperty("spark.jobGroup.id") == group) markerJobs.add(e.jobId)
+        else jobs.incrementAndGet()
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (markerJobs.contains(e.jobId)) flushed.countDown()
     }
@@ -150,7 +152,7 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.clearJobGroup()
       assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, ids.asScala.toSet)
+      (out, ids.asScala.toSet, jobs.get)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -198,16 +200,15 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val filtered = Curation(docs, "doc_id", "text").qualityFilter()
     val eval = filtered.docs.filter(col("doc_id") === 97L)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (deduped, stored) = storedRddsDuring(filtered.nearDedup())
-    // nearDedup caches only its pair stage's slots, and leaves them
-    // behind: the winnow token relation (read by both self-join sides)
-    // and the pairs (read by the bounded collect) — no edge frame,
-    // not even a transient one
+    val (deduped, stored, _) = sparkActivityDuring(filtered.nearDedup())
+    // nearDedup stores one RDD, the pair checkpoint that component
+    // resolution reads, and frees it before it returns: no token or
+    // pair slot, no edge frame, nothing left behind
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    val pairs = Dedup.winnowJaccardPairsOfWords(filtered.docs, "doc_id", "__w", 3, 4, 0.3)
-    assert(pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-    assert(added.size == 2, s"persisted beyond the pair slots: $added")
-    assert(stored == added, s"cached during nearDedup: $stored, kept: $added")
+    assert(added.isEmpty, s"nearDedup left persisted RDDs behind: $added")
+    assert(stored.size == 1, s"cached during nearDedup: $stored")
+    assert(stored.forall(id => !spark.sparkContext.getPersistentRDDs.contains(id)),
+      s"the pair checkpoint $stored is still persisted")
     val out = deduped.decontaminate(eval).docs
     assert(out.collect().map(_.getLong(0)).toSet == Set(1L, 10L))
     val plan = out.queryExecution.executedPlan
@@ -226,6 +227,24 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     assert(nearDedupAnti.nonEmpty,
       s"near-dedup removal is not a broadcast anti-join:\n$plan")
+  }
+
+  test("qualityFilter().nearDedup() under the driver cap starts at most 4 Spark jobs") {
+    // one job per exchange of the pair plan (the token rows' window on
+    // the id, the self-join on the token, the pair aggregate) plus the
+    // job that checkpoints and counts the pairs; the driver union-find
+    // reads that checkpoint, so nothing re-runs the pair plan
+    def edited(text: String, at: Int) =
+      text.split(" ").toSeq.updated(at, s"edit$at").mkString(" ")
+    val (a, b) = (doc(80, 110), doc(70, 111))
+    val dir = java.nio.file.Files.createTempDirectory("graft_cur_jobs").toString
+    Seq((1L, a), (2L, edited(a, 40)), (3L, edited(a, 10)), (4L, b),
+      (5L, edited(b, 30)), (6L, doc(60, 112)), (7L, doc(5, 113)))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+    val cur = Curation(spark.read.parquet(dir), "doc_id", "text")
+    val (deduped, _, jobs) = sparkActivityDuring(cur.qualityFilter().nearDedup())
+    assert(jobs <= 4, s"qualityFilter().nearDedup() started $jobs jobs")
+    assert(deduped.docs.select("doc_id").as[Long].collect().toSet == Set(1L, 4L, 6L))
   }
 
   test("spanFilter drops boilerplate-heavy docs; importanceSelect keeps target-like docs") {

@@ -173,6 +173,48 @@ class ExtensionOpsSpec extends SparkSpec {
     }
   }
 
+  test("jaccardFromTokens equals the counts + join-back form on random token relations") {
+    import spark.implicits._
+    // the retired form of the Jaccard tail, kept here as the oracle:
+    // per-id set sizes as an aggregate, joined back onto the pair
+    // aggregate once per side
+    def joinBack(t: org.apache.spark.sql.DataFrame, minJaccard: Double) = {
+      val counts = t.groupBy(col("id")).agg(count(lit(1)).as("n"))
+      t.select(col("id").as("id_a"), col("tok"))
+        .join(t.select(col("id").as("id_b"), col("tok")), Seq("tok"))
+        .filter(col("id_a") < col("id_b"))
+        .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
+        .join(counts.select(col("id").as("id_a"), col("n").as("na")), "id_a")
+        .join(counts.select(col("id").as("id_b"), col("n").as("nb")), "id_b")
+        .withColumn("jaccard", round(col("inter").cast("double") /
+          (col("na") + col("nb") - col("inter")), 4))
+        .filter(col("jaccard") >= minJaccard)
+        .select(col("id_a"), col("id_b"), col("jaccard"))
+    }
+    // 8 seeded relations in one frame: seed s owns ids s*100 + k and
+    // tokens "s:t", so no pair crosses seeds. Id s*100 is duplicated
+    // (two token sets under one id, so some (id, tok) rows repeat),
+    // some ids carry a null token, and id s*100 + 99 has no token at
+    // all, only a null one
+    val rows = (0 until 8).flatMap { s =>
+      val rnd = new scala.util.Random(s)
+      def draw(id: Long) = rnd.shuffle((0 until 12).toList)
+        .take(2 + rnd.nextInt(6)).map(t => (id, Option(s"$s:$t")))
+      val ids = (0 until 10).map(k => s * 100L + k)
+      ids.flatMap(draw) ++ draw(s * 100L) ++
+        ids.filter(_ => rnd.nextInt(4) == 0).map(id => (id, Option.empty[String])) :+
+        (s * 100L + 99, Option.empty[String])
+    }
+    val t = rows.toDF("id", "tok")
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(p => (p._1, p._2)).toSeq
+    for (minJaccard <- Seq(0.0, 0.5)) {
+      val got = sorted(Dedup.jaccardFromTokens(t, minJaccard))
+      assert(got.nonEmpty, s"minJaccard $minJaccard: no pairs")
+      assert(got == sorted(joinBack(t, minJaccard)), s"minJaccard $minJaccard")
+    }
+  }
+
   test("winnowed fingerprints overlap heavily for near-identical docs") {
     import spark.implicits._
     import graft.functions.TextFunctions._

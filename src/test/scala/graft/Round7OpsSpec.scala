@@ -202,17 +202,22 @@ class Round7OpsSpec extends SparkSpec {
     assert(acc.snapshot.counters.sameElements(batch.counters))
   }
 
-  test("rebuilding a dedup query hits the token slot (bench trial shape)") {
+  test("winnowJaccardPairs persists nothing") {
+    // 7 groups of identical docs over disjoint vocabularies: every
+    // within-group pair and no other, at jaccard 1: residues 1-5 hold
+    // 6 docs each, 0 and 6 hold 5, so 5 * C(6, 2) + 2 * C(5, 2) = 95
     val docs = (1 to 40)
       .map(i => (i.toLong, (1 to 30).map(t => s"d${i % 7}w$t").mkString(" ")))
       .toDF("doc_id", "text")
-    def run() = Dedup.winnowJaccardPairs(docs, "doc_id", "text",
-      shingleLen = 3, window = 4, minJaccard = 0.3).count()
-    run()
-    val (h0, _) = PersistSlots.stats
-    run() // trial 2: same inputs, rebuilt plan
-    val (h1, _) = PersistSlots.stats
-    assert(h1 - h0 >= 1, "re-trial must reuse the persisted token relation")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val slots = PersistSlots.stats
+    val pairs = Dedup.winnowJaccardPairs(docs, "doc_id", "text",
+      shingleLen = 3, window = 4, minJaccard = 0.3)
+    assert(pairs.count() == 95L)
+    assert(pairs.filter(col("jaccard") =!= 1.0).isEmpty)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"persisted: $added")
+    assert(PersistSlots.stats == slots, "a session slot was swapped")
   }
 
   // ---- snapshot drift (Drift.scala) ----
